@@ -2,15 +2,21 @@ package graft.etl
 
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 import graft.config.EtlConfig
 import graft.operators.HourlyRollup
 
 /** `etl_main` equivalent (`main.py:44-133` minus the process plumbing):
   * per job — partition-pruned read → hourly rollup → partitioned snappy
-  * write → metadata bypass → catalog registration — then one tracker
-  * summary for the run. The reference's worker pool, queues, crash monitor
-  * and backoff are all subsumed by Spark's scheduler (SURVEY.md §2.11).
+  * write → metadata byte copy — then catalog registration for the run (one
+  * data table per state, one metadata table over every job's metadata)
+  * and one tracker summary. The reference's worker pool, queues, crash
+  * monitor and backoff are all subsumed by Spark's scheduler (SURVEY.md
+  * §2.11).
+  *
+  * `dataTables(i)` and `metadataTables(i)` name the tables job `i`'s saved
+  * queries run against; jobs of one state share a data table.
   */
 final case class EtlResult(
     runRoot: String,
@@ -27,19 +33,17 @@ object EtlRunner {
     val t0 = System.nanoTime()
     val root = Sink.runRoot(config.settings.output_dir)
     val reports = scala.collection.mutable.ArrayBuffer.empty[JobReport]
-    val dataTables = scala.collection.mutable.ArrayBuffer.empty[String]
-    val metaTables = scala.collection.mutable.ArrayBuffer.empty[String]
+    // (state, written data directory, the schema the write used)
+    val written = scala.collection.mutable.ArrayBuffer.empty[(String, String, StructType)]
+    val metaEntries = scala.collection.mutable.ArrayBuffer.empty[String]
 
     config.job_specific.zipWithIndex.foreach { case (job, i) =>
       val name = job.jobName(i)
       val data = PartitionedSource.readData(
         spark, config.settings.base_partition, config.settings.data_partition_in_release, job)
-      // Listed = files under the job's partition prefixes (the reference's
-      // per-prefix listing, indexer.py:204-207). NOT data.inputFiles, which
-      // reports the whole relation before partition pruning.
-      val listed = PathResolver.dataPrefixes(
-        config.settings.base_partition, config.settings.data_partition_in_release, job)
-        .map(Tracker.countFiles).sum
+      // Listed = the read's own file index, which holds exactly the files
+      // under the job's partition prefixes (indexer.py:204-207).
+      val listed = data.inputFiles.length.toLong
       // Row counts ride the write job as observed metrics (SURVEY.md §2.11:
       // the reference's tracker process maps to df.observe) — no extra
       // count() scans over the input or the written output.
@@ -70,28 +74,42 @@ object EtlRunner {
         graft.operators.Profiling.publishObservedStats(spark,
           s"$sr/${DataTablePrefix}_state_${job.state}.bldg_id_min",
           "bldg_id_min", 64, n, mins, cands,
-          spark.read.parquet(dataOut), nBytes)
+          spark.read.schema(rolled.schema).parquet(dataOut), nBytes)
       }
       val rowsIn = obsIn.get("n").asInstanceOf[Long]
       val rowsOut = obsOut.get("n").asInstanceOf[Long]
       val filesOut = Tracker.countFiles(dataOut)
 
-      val meta = PartitionedSource.readMetadata(spark, job)
-      val (metaListed, metaWritten) = meta match {
-        case Some(m) =>
-          val n = m.inputFiles.length.toLong
-          val out = Sink.writeMetadata(m, root, name)
-          metaTables += CatalogRegistry.registerMetadata(spark, out, MetadataTablePrefix)
-          (n, Tracker.countFiles(out))
-        case None => (0L, 0L)
-      }
-      dataTables += CatalogRegistry.registerData(spark, dataOut, DataTablePrefix, job.state)
-      reports += JobReport(name, listed, rowsIn, rowsOut, filesOut, metaListed, metaWritten)
+      val metaSrc = PartitionedSource.metadataPaths(job)
+      val copied = Sink.copyMetadataRaw(metaSrc, root, name)
+      metaEntries ++= copied
+      written += ((job.state, dataOut, rolled.schema))
+      reports += JobReport(name, listed, rowsIn, rowsOut, filesOut,
+        metaSrc.map(Tracker.countFiles).sum, copied.map(Tracker.countFiles).sum)
     }
 
+    // Registered after the last job, so no job replaces another's table.
+    // The entries, not the metadata/ directories: Spark does not list part
+    // files inside a directory entry (a v1 metadata "file" written by Spark)
+    // below a read root.
+    val metaTable = CatalogRegistry.metadataTableName(MetadataTablePrefix)
+    if (metaEntries.nonEmpty)
+      CatalogRegistry.registerMetadata(spark, metaEntries.toSeq, MetadataTablePrefix)
+    else spark.catalog.dropTempView(metaTable)
+    def tableOf(state: String) = CatalogRegistry.dataTableName(DataTablePrefix, state)
+    written.groupBy(w => tableOf(w._1)).values.foreach { outs =>
+      CatalogRegistry.registerData(spark, outs.map(_._2).toSeq, DataTablePrefix, outs.head._1,
+        Some(outs.map(_._3).reduce(unionSchema)))
+    }
+    val dataTables = written.map(w => tableOf(w._1)).toSeq
+
     val report = RunReport((System.nanoTime() - t0) / 1e9, reports.toSeq)
-    EtlResult(root, report, dataTables.toSeq, metaTables.toSeq)
+    EtlResult(root, report, dataTables, Seq.fill(dataTables.size)(metaTable))
   }
+
+  /** `a`'s fields, then `b`'s fields `a` lacks. */
+  private def unionSchema(a: StructType, b: StructType): StructType =
+    StructType(a.fields ++ b.fields.filterNot(f => a.fieldNames.contains(f.name)))
 
   // ---- incremental runs (extension: the reference reprocesses everything
   // on every trigger; a manifest of processed (release, year, state,

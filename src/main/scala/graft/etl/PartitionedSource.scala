@@ -6,38 +6,43 @@ import org.apache.spark.sql.functions.col
 import graft.config.JobSpec
 
 /** Partition-pruned reads replacing the reference's manual S3 prefix
-  * listing (SURVEY.md §2.1 S1/S2): one `basePath` read over the release
-  * tree with filters on the `upgrade`/`state` partition columns. Catalyst's
-  * file-index partition pruning turns those filters into exactly the
-  * directory listing the reference hand-builds (`indexer.py:204-207`) —
-  * non-selected partitions are never listed, which is what keeps the scan
-  * proportional to the job, not the lake, at 100 TB.
+  * listing (SURVEY.md §2.1 S1/S2): one read over exactly the job's
+  * `upgrade=/state=` prefixes (`indexer.py:204-207`), with `basePath` at
+  * the release's data root so `upgrade`/`state` stay partition columns.
+  * Non-selected partitions are never listed, which is what keeps the file
+  * index proportional to the job, not the lake, at 100 TB.
   */
 object PartitionedSource {
 
-  /** Read the time-series slice a job selects. Partition filters prune at
-    * the file-index level (verify with `.explain`: PartitionFilters). */
+  /** A path a job may read: a local path that exists, or a remote one,
+    * whose existence is left to the reader (the reference logs and
+    * continues on absent metadata). */
+  private def available(path: String): Boolean =
+    new java.io.File(path).exists() || !path.startsWith("/")
+
+  /** Read the time-series slice a job selects. Only the job's prefixes are
+    * listed, so `inputFiles` is the job's own file set. A job none of whose
+    * prefixes exist fails here, naming them. */
   def readData(spark: SparkSession, base: String, dataPartition: String, job: JobSpec): DataFrame = {
-    val basePath = PathResolver.dataBasePath(base, dataPartition, job)
-    var df = spark.read
-      .option("basePath", basePath)
-      .parquet(basePath)
-      .where(col("upgrade").isin(job.upgrades: _*) && col("state") === job.state)
+    val prefixes = PathResolver.dataPrefixes(base, dataPartition, job)
+    val present = prefixes.filter(available)
+    if (present.isEmpty)
+      throw new IllegalArgumentException(
+        s"no data for ${job.state} upgrades ${job.upgrades.mkString(",")}: " +
+          s"none of the prefixes exist: ${prefixes.mkString(", ")}")
+    val df = spark.read
+      .option("basePath", PathResolver.dataBasePath(base, dataPartition, job))
+      .parquet(present: _*)
     job.counties match {
       case Some(cs) if cs.nonEmpty && cs != Seq("*") && df.columns.contains("county") =>
-        df = df.where(col("county").isin(cs: _*))
-      case _ => ()
+        df.where(col("county").isin(cs: _*))
+      case _ => df
     }
-    df
   }
 
-  /** Exact-path metadata read (S3 — no listing when paths are computable;
+  /** Exact metadata paths (S3 — no listing when paths are computable;
     * `indexer.py:48-91,135-137`). Missing paths are skipped (the reference
     * logs-and-continues on absent metadata). */
-  def readMetadata(spark: SparkSession, job: JobSpec): Option[DataFrame] = {
-    val paths = PathResolver.metadataPaths(job)
-      .filter(p => new java.io.File(p).exists() || !p.startsWith("/"))
-    if (paths.isEmpty) None
-    else Some(spark.read.parquet(paths: _*))
-  }
+  def metadataPaths(job: JobSpec): Seq[String] =
+    PathResolver.metadataPaths(job).filter(available)
 }

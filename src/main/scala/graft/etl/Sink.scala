@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
 /** Output layout of the reference (SURVEY.md §2.1 S7/S8): a run-stamped
   * root (`main.py:47-49` — `{output_dir}/{YYYY-MM-DD-HH-MM-SS}/`), a
   * per-job subdirectory (`worker.py:207`), Hive partition dirs preserved
-  * (`worker.py:201-210`), snappy parquet (`worker.py:184,196`).
+  * (`worker.py:201-210`), snappy parquet (`worker.py:184,196`), metadata
+  * copied byte for byte (`worker.py:171-173`).
   *
   * Unlike the reference (one output file per input file, one process each),
   * the partitioned write shuffles nothing: each task writes its split into
@@ -173,23 +174,14 @@ object Sink {
       .parquet(dataDir)
   }
 
-  /** Metadata bypass (S6): re-encode through the parquet reader/writer.
-    * The reference copies bytes verbatim (`worker.py:171-173,191-192`); a
-    * re-encode keeps identical rows while normalizing encodings. For the
-    * literal byte-for-byte form see [[copyMetadataRaw]]. */
-  def writeMetadata(df: DataFrame, runRoot: String, jobName: String): String = {
-    val out = s"$runRoot/$jobName/metadata"
-    df.write.mode("overwrite").option("compression", "snappy").parquet(out)
-    out
-  }
-
-  /** Literal byte-for-byte metadata bypass — the reference's exact behavior
-    * (`worker.py:171-173`): source files land under the run root unchanged
-    * (same checksums), no parquet decode/encode at all. */
-  def copyMetadataRaw(srcPaths: Seq[String], runRoot: String, jobName: String): String = {
-    val outDir = java.nio.file.Paths.get(s"$runRoot/$jobName/metadata_raw")
-    java.nio.file.Files.createDirectories(outDir)
-    srcPaths.foreach { p =>
+  /** Metadata bypass (S6), the reference's exact behavior
+    * (`worker.py:171-173`): each source file or directory lands under
+    * `<job>/metadata` byte for byte (same checksums), with no parquet
+    * decode or encode and no Spark job. Returns the copied entries. */
+  def copyMetadataRaw(srcPaths: Seq[String], runRoot: String, jobName: String): Seq[String] = {
+    val outDir = java.nio.file.Paths.get(s"$runRoot/$jobName/metadata")
+    srcPaths.map { p =>
+      java.nio.file.Files.createDirectories(outDir)
       val src = java.nio.file.Paths.get(p)
       def copy(s: java.nio.file.Path, d: java.nio.file.Path): Unit =
         if (java.nio.file.Files.isDirectory(s)) {
@@ -202,8 +194,9 @@ object Sink {
         } else
           java.nio.file.Files.copy(s, d,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      copy(src, outDir.resolve(src.getFileName))
+      val dest = outDir.resolve(src.getFileName)
+      copy(src, dest)
+      dest.toString
     }
-    outDir.toString
   }
 }

@@ -16,7 +16,9 @@ class EtlPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val lake = Files.createTempDirectory("graft_lake").toString
-  private lazy val outRoot = Files.createTempDirectory("graft_out").toString
+
+  /** CA's buildings are AK's ids shifted by this, so the states share none. */
+  private val CaOffset = 1000000
 
   private def buildSourceTree(): Unit = {
     // Time-series: events sf0.001 reshaped to the reference's data model,
@@ -25,31 +27,67 @@ class EtlPipelineSpec extends SparkSpec {
     val events = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("ts").as("timestamp"), col("user_id").as("bldg_id"),
         col("value").as("load"), col("event_type").as("mode"))
+    def ofState(s: String) =
+      if (s == "CA") events.withColumn("bldg_id", col("bldg_id") + CaOffset) else events
     for (u <- Seq(0, 1); s <- Seq("AK", "CA")) {
-      events.write.mode("overwrite").parquet(
+      ofState(s).write.mode("overwrite").parquet(
         s"$lake/2024/test_release/timeseries_individual_buildings/by_state/upgrade=$u/state=$s")
     }
-    // Metadata v1: building characteristics with the dotted column names.
-    val meta = events.select(col("bldg_id")).distinct()
-      .withColumn("in.state", lit("AK"))
-      .withColumn("in.county_name", lit("AK, Test Borough"))
-      .withColumn("in.comstock_building_type",
-        when(col("bldg_id") % 2 === 0, "Hospital").otherwise("Office"))
-      .withColumn("in.comstock_building_type_group",
-        when(col("bldg_id") % 2 === 0, "Healthcare").otherwise("Commercial"))
-    meta.write.mode("overwrite").parquet(
-      s"$lake/meta/by_state/state=AK/parquet/AK_baseline_metadata_and_annual_results.parquet")
+    // Metadata v1: building characteristics with the dotted column names,
+    // baseline only, each a directory of part files as Spark writes it.
+    for (s <- Seq("AK", "CA")) {
+      val meta = ofState(s).select(col("bldg_id")).distinct()
+        .withColumn("in.state", lit(s))
+        .withColumn("in.county_name", lit(s"$s, Test Borough"))
+        .withColumn("in.comstock_building_type",
+          when(col("bldg_id") % 2 === 0, "Hospital").otherwise("Office"))
+        .withColumn("in.comstock_building_type_group",
+          when(col("bldg_id") % 2 === 0, "Healthcare").otherwise("Commercial"))
+      meta.write.mode("overwrite").parquet(
+        s"$lake/meta/by_state/state=$s/parquet/${s}_baseline_metadata_and_annual_results.parquet")
+    }
+  }
+
+  private val dataPartition = "timeseries_individual_buildings/by_state"
+
+  private def job(state: String, upgrades: Seq[Int] = Seq(0)) = JobSpec(
+    release_name = "test_release", release_year = "2024", state = state,
+    upgrades = upgrades, metadata_root_dir = s"$lake/meta",
+    relative_metadata_prefix_type = 1)
+
+  private def config(jobs: JobSpec*) = EtlConfig(
+    EtlSettings(base_partition = lake,
+      output_dir = Files.createTempDirectory("graft_out").toString),
+    jobs)
+
+  private lazy val savedSql =
+    new String(getClass.getResourceAsStream("/graft/saved-queries.sql").readAllBytes(), "UTF-8")
+
+  /** Check all three saved queries for job `i` of `result` against the
+    * fixture's buildings of `state`. */
+  private def assertSavedQueries(result: EtlResult, i: Int, state: String): Unit = {
+    val ids = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+      .select(col("user_id").cast("long")).distinct().collect().map(_.getLong(0))
+      .map(_ + (if (state == "CA") CaOffset else 0))
+    val reg = QueryRegistry.load(savedSql, Map(
+      "metadata_table" -> result.metadataTables(i),
+      "data_table" -> result.dataTables(i),
+      "state" -> state))
+    val total = QueryRegistry.run(spark, reg, "total_buildings").collect().head.getLong(0)
+    assert(total === ids.length, s"total_buildings for $state")
+    val byGroup = QueryRegistry.run(spark, reg, "buildings_by_group")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(byGroup === Map("Healthcare" -> ids.count(_ % 2 == 0).toLong,
+      "Commercial" -> ids.count(_ % 2 != 0).toLong), s"buildings_by_group for $state")
+    val top = QueryRegistry.run(spark, reg, "top_buildings_per_group")
+      .collect().map(_.getAs[Number]("bldg_id").longValue)
+    // < 500 buildings per group, so every one survives the cut
+    assert(top.sorted.toSeq === ids.sorted.toSeq, s"top_buildings_per_group for $state")
   }
 
   test("full ETL run: prune → rollup → partitioned write → catalog → saved queries → tracker") {
     buildSourceTree()
-    val cfg = EtlConfig(
-      EtlSettings(base_partition = lake, output_dir = outRoot),
-      Seq(JobSpec(
-        release_name = "test_release", release_year = "2024", state = "AK",
-        upgrades = Seq(0), metadata_root_dir = s"$lake/meta",
-        relative_metadata_prefix_type = 1)))
-
+    val cfg = config(job("AK"))
     val result = EtlRunner.run(spark, cfg)
     val report = result.report.jobs.head
 
@@ -57,8 +95,7 @@ class EtlPipelineSpec extends SparkSpec {
     // slices) — and the pruned scan really only touched those files.
     val allFiles = Tracker.countFiles(s"$lake/2024/test_release")
     assert(report.dataFilesListed > 0 && report.dataFilesListed < allFiles)
-    val touched = PartitionedSource.readData(spark, lake, "timeseries_individual_buildings/by_state",
-        cfg.job_specific.head)
+    val touched = PartitionedSource.readData(spark, lake, dataPartition, cfg.job_specific.head)
       .select(input_file_name()).distinct().collect().map(_.getString(0))
     assert(touched.nonEmpty && touched.forall(_.contains("upgrade=0/state=AK")))
 
@@ -75,24 +112,7 @@ class EtlPipelineSpec extends SparkSpec {
     assert(!report.lostOutput)
 
     // Saved queries through the registry against the registered tables.
-    val sqlText = new String(getClass.getResourceAsStream("/graft/saved-queries.sql").readAllBytes(), "UTF-8")
-    val reg = QueryRegistry.load(sqlText, Map(
-      "metadata_table" -> result.metadataTables.head,
-      "data_table" -> result.dataTables.head,
-      "state" -> "AK"))
-    val total = QueryRegistry.run(spark, reg, "total_buildings").collect().head.getLong(0)
-    val expectedBldgs = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
-      .select(countDistinct(col("user_id"))).collect().head.getLong(0)
-    assert(total === expectedBldgs)
-
-    val byGroup = QueryRegistry.run(spark, reg, "buildings_by_group")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byGroup.values.sum === expectedBldgs)
-    assert(byGroup.keySet === Set("Healthcare", "Commercial"))
-
-    val top = QueryRegistry.run(spark, reg, "top_buildings_per_group")
-    assert(top.count() === expectedBldgs) // < 500 per group, so all survive
-    assert(top.filter(col("rn") > 500).count() === 0)
+    assertSavedQueries(result, 0, "AK")
 
     // Tracker summary: README-shaped JSON, metadata round-trip intact.
     assert(report.metadataFilesListed > 0 && report.metadataFilesWritten > 0)
@@ -103,16 +123,9 @@ class EtlPipelineSpec extends SparkSpec {
   test("ETL writes publish planner stats under a session catalog root; consultOr finds them") {
     buildSourceTree()
     val statsRoot = Files.createTempDirectory("graft_etl_stats").toString
-    val out2 = Files.createTempDirectory("graft_out_stats").toString
     spark.conf.set("spark.graft.statsCatalogRoot", statsRoot)
     try {
-      val cfg = EtlConfig(
-        EtlSettings(base_partition = lake, output_dir = out2),
-        Seq(JobSpec(
-          release_name = "test_release", release_year = "2024", state = "AK",
-          upgrades = Seq(0), metadata_root_dir = s"$lake/meta",
-          relative_metadata_prefix_type = 1)))
-      val result = EtlRunner.run(spark, cfg)
+      val result = EtlRunner.run(spark, config(job("AK")))
       // the write's own observation published the entry — zero extra scans
       // beyond the column-pruned skew verify
       val entryName = "oedi_data_state_AK.bldg_id_min"
@@ -150,5 +163,63 @@ class EtlPipelineSpec extends SparkSpec {
     assert(plan.toLowerCase.contains("dynamicpruning"),
       s"expected a dynamicpruning subquery in the scan's PartitionFilters:\n$plan")
     assert(joined.collect().map(_.getString(0)).toSeq === Seq("AK"))
+  }
+
+  test("two-state run: every state's saved queries answer from the run's one metadata table") {
+    buildSourceTree()
+    val maxId = graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+      .agg(max(col("user_id"))).collect().head.getAs[Number](0).longValue
+    assert(maxId < CaOffset, "the fixture's AK and CA ids must not overlap")
+    val result = EtlRunner.run(spark, config(job("AK"), job("CA")))
+    assert(result.metadataTables === Seq("oedi_metadata_parquet", "oedi_metadata_parquet"))
+    assert(result.dataTables === Seq("oedi_data_state_ak", "oedi_data_state_ca"))
+    assertSavedQueries(result, 0, "AK")
+    assertSavedQueries(result, 1, "CA")
+  }
+
+  test("two jobs of one state share one data table over both jobs' output") {
+    buildSourceTree()
+    // a second upgrade of the same state, as another job
+    val result = EtlRunner.run(spark, config(job("AK", Seq(0)), job("AK", Seq(1))))
+    assert(result.dataTables === Seq("oedi_data_state_ak", "oedi_data_state_ak"))
+    val table = spark.table(result.dataTables.head)
+    assert(table.count() === result.report.jobs.map(_.dataRowsOut).sum)
+    assert(table.select("upgrade").distinct().collect().map(_.getInt(0)).sorted.toSeq === Seq(0, 1))
+    assertSavedQueries(result, 1, "AK")
+  }
+
+  test("a job whose data prefixes are all missing fails, naming them") {
+    buildSourceTree()
+    val missing = job("TX", Seq(0, 1))
+    val e = intercept[IllegalArgumentException](EtlRunner.run(spark, config(missing)))
+    PathResolver.dataPrefixes(lake, dataPartition, missing).foreach(p =>
+      assert(e.getMessage.contains(p), e.getMessage))
+    // one missing prefix among present ones is skipped
+    val partial = PartitionedSource.readData(spark, lake, dataPartition, job("AK", Seq(0, 7)))
+    assert(partial.select("upgrade").distinct().collect().map(_.getInt(0)).toSeq === Seq(0))
+  }
+
+  test("a two-state run starts at most 3 Spark jobs per ETL job + 1 and lists only the jobs' prefixes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    buildSourceTree()
+    val jobs = Seq(job("AK"), job("CA"))
+    val cfg = config(jobs: _*)
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { started.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      EtlRunner.run(spark, cfg)
+      org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(started.get() <= 3 * jobs.size + 1, s"${started.get()} Spark jobs for ${jobs.size} ETL jobs")
+    jobs.foreach { j =>
+      val prefixes = PathResolver.dataPrefixes(lake, dataPartition, j)
+      val files = PartitionedSource.readData(spark, lake, dataPartition, j).inputFiles
+        .map(f => new java.net.URI(f).getPath)
+      assert(files.nonEmpty && files.forall(f => prefixes.exists(p => f.startsWith(p + "/"))),
+        s"${j.state} indexed files outside its prefixes: ${files.mkString(", ")}")
+    }
   }
 }

@@ -27,7 +27,8 @@ class EtlRobustnessSpec extends SparkSpec {
     graft.sources.Tables.nation(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(src)
     val runRoot = Files.createTempDirectory("graft_raw_out").toString
-    val out = Sink.copyMetadataRaw(Seq(src), runRoot, "job0")
+    val Seq(out) = Sink.copyMetadataRaw(Seq(src), runRoot, "job0")
+    assert(out === s"$runRoot/job0/metadata/meta.parquet")
     def md5s(dir: String): Map[String, String] = {
       val d = java.nio.file.Paths.get(dir)
       java.nio.file.Files.walk(d)
@@ -38,7 +39,7 @@ class EtlRobustnessSpec extends SparkSpec {
             .digest(java.nio.file.Files.readAllBytes(p)).map("%02x".format(_)).mkString)
         .toMap
     }
-    assert(md5s(s"$out/meta.parquet") === md5s(src)) // identical checksums
+    assert(md5s(out) === md5s(src)) // identical checksums
   }
 
   test("validator counts violations in one pass") {
