@@ -31,6 +31,7 @@ object EtlRunner {
 
   def run(spark: SparkSession, config: EtlConfig): EtlResult = {
     val t0 = System.nanoTime()
+    val conf = spark.sparkContext.hadoopConfiguration
     val root = Sink.runRoot(config.settings.output_dir)
     val reports = scala.collection.mutable.ArrayBuffer.empty[JobReport]
     // (state, written data directory, the schema the write used)
@@ -78,14 +79,14 @@ object EtlRunner {
       }
       val rowsIn = obsIn.get("n").asInstanceOf[Long]
       val rowsOut = obsOut.get("n").asInstanceOf[Long]
-      val filesOut = Tracker.countFiles(dataOut)
+      val filesOut = Tracker.countFiles(dataOut, conf)
 
-      val metaSrc = PartitionedSource.metadataPaths(job)
-      val copied = Sink.copyMetadataRaw(metaSrc, root, name)
+      val metaSrc = PartitionedSource.metadataPaths(job, conf)
+      val copied = Sink.copyMetadataRaw(metaSrc, root, name, conf)
       metaEntries ++= copied
       written += ((job.state, dataOut, rolled.schema))
       reports += JobReport(name, listed, rowsIn, rowsOut, filesOut,
-        metaSrc.map(Tracker.countFiles).sum, copied.map(Tracker.countFiles).sum)
+        metaSrc.map(Tracker.countFiles(_, conf)).sum, copied.map(Tracker.countFiles(_, conf)).sum)
     }
 
     // Registered after the last job, so no job replaces another's table.

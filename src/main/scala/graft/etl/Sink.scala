@@ -3,7 +3,10 @@ package graft.etl
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Output layout of the reference (SURVEY.md §2.1 S7/S8): a run-stamped
   * root (`main.py:47-49` — `{output_dir}/{YYYY-MM-DD-HH-MM-SS}/`), a
@@ -12,8 +15,11 @@ import org.apache.spark.sql.DataFrame
   * copied byte for byte (`worker.py:171-173`).
   *
   * Unlike the reference (one output file per input file, one process each),
-  * the partitioned write shuffles nothing: each task writes its split into
-  * the right `upgrade=/state=` directory via dynamic partition overwrite.
+  * a partitioned write first clusters its rows by the partition columns
+  * (one REBALANCE shuffle, [[clusteredByPartition]]), so each
+  * `upgrade=/state=[/county=]` directory gets one file, or a few when it is
+  * larger than AQE's advisory partition size — never one file per pair of
+  * task and directory.
   */
 object Sink {
 
@@ -23,17 +29,38 @@ object Sink {
     s"$outputDir/${stampFmt.format(at)}"
 
   /** Write the transformed data partitioned by the partition columns that
-    * survived the read (upgrade/state[/county]). */
+    * survived the read (upgrade/state[/county]), clustered by them first
+    * ([[clusteredByPartition]]): one file per partition directory unless
+    * that directory's rows outgrow AQE's advisory partition size. A frame
+    * without partition columns is written as it is. */
   def writeData(df: DataFrame, runRoot: String, jobName: String): String = {
     val out = s"$runRoot/$jobName/data"
     val partCols = Seq("upgrade", "state", "county").filter(df.columns.contains)
-    df.write
+    clusteredByPartition(df, partCols).write
       .mode("overwrite")
       .option("compression", "snappy")
       .partitionBy(partCols: _*)
       .parquet(out)
     out
   }
+
+  /** Small-files control for a dynamic-partition write. Written as it
+    * comes, such a write emits one file per pair of task and partition
+    * value: 1000 tasks × 3000 counties = 3M files of a few KB each, and
+    * every later scan pays a file open per file. REBALANCE on the
+    * partition columns routes each partition value to one writer task;
+    * AQE (on by default, and in every session of this project) splits a
+    * value only when its shuffle data is larger than
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`, and coalesces the
+    * small ones. So files per directory follow the directory's size, not
+    * the input split layout. Without AQE the hint is a plain hash
+    * repartition by the partition columns (one task per value, no split).
+    *
+    * Place it after any aggregation, as [[writeData]] does with the rollup:
+    * below an aggregate AQE must undo a skew split, which would break the
+    * aggregate's clustering, and a large county would become one task. */
+  private def clusteredByPartition(df: DataFrame, partCols: Seq[String]): DataFrame =
+    if (partCols.isEmpty) df else df.hint("rebalance", partCols.map(col): _*)
 
   /** Bucketed managed table: pre-shuffles data into `nBuckets` by the join
     * key at write time so later equi-joins between tables bucketed the same
@@ -48,43 +75,6 @@ object Sink {
       .bucketBy(nBuckets, bucketCol)
       .sortBy(bucketCol)
       .saveAsTable(table)
-
-  /** Small-files control — the 100 TB writer discipline [[writeData]]
-    * omits: a dynamic-partition write emits one file per (task ×
-    * partition-value) pair, so 1000 tasks × 3000 counties = 3M files of a
-    * few KB each, and every later scan pays a file-open per file.
-    * Repartitioning ON the partition columns first routes each
-    * partition-value to exactly `writeTasksPerPartition` tasks (a
-    * deterministic content-hash salt spreads hot partitions across them),
-    * and `maxRecordsPerFile` re-splits any file that would exceed the
-    * target row count — together: files-per-dir is bounded below by task
-    * count and above by data size, never by the accident of input split
-    * layout. */
-  def writeDataSized(
-      df: DataFrame,
-      runRoot: String,
-      jobName: String,
-      partCols: Seq[String] = Seq("upgrade", "state", "county"),
-      maxRecordsPerFile: Long = 5000000L,
-      writeTasksPerPartition: Int = 1): String = {
-    import org.apache.spark.sql.functions._
-    require(writeTasksPerPartition > 0)
-    val out = s"$runRoot/$jobName/data"
-    val pc = partCols.filter(df.columns.contains)
-    val dataCols = df.columns.filterNot(pc.contains).toSeq
-    df
-      .withColumn("__wsalt",
-        pmod(hash(dataCols.map(col): _*), lit(writeTasksPerPartition)))
-      .repartition((pc.map(col) :+ col("__wsalt")): _*)
-      .drop("__wsalt")
-      .write
-      .mode("overwrite")
-      .option("compression", "snappy")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(pc: _*)
-      .parquet(out)
-    out
-  }
 
   /** Parquet bloom filters at write time — the point-lookup skipping tier
     * BELOW zone maps: min/max stats prune range predicates but are
@@ -156,6 +146,10 @@ object Sink {
     * scheduled pipeline needs: at 100 TB a one-day backfill rewrites one
     * day's directories, not the table.
     *
+    * Rows are clustered by `partCols` first, as in [[writeData]], so each
+    * replaced directory gets one file (or a few, by size) however many
+    * tasks produced its rows.
+    *
     * The overwrite mode rides a per-write option, not a session conf, so
     * concurrent writers with different intents can't race on a global
     * setting. NOT safe under concurrent readers of the SAME partitions
@@ -166,7 +160,7 @@ object Sink {
       partCols: Seq[String]): Unit = {
     val pc = partCols.filter(df.columns.contains)
     require(pc.nonEmpty, s"backfill needs at least one partition column in ${df.columns.toSeq}")
-    df.write
+    clusteredByPartition(df, pc).write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
@@ -177,25 +171,19 @@ object Sink {
   /** Metadata bypass (S6), the reference's exact behavior
     * (`worker.py:171-173`): each source file or directory lands under
     * `<job>/metadata` byte for byte (same checksums), with no parquet
-    * decode or encode and no Spark job. Returns the copied entries. */
-  def copyMetadataRaw(srcPaths: Seq[String], runRoot: String, jobName: String): Seq[String] = {
-    val outDir = java.nio.file.Paths.get(s"$runRoot/$jobName/metadata")
+    * decode or encode and no Spark job. Source and destination may be on
+    * any Hadoop file system (local paths, `file:` or remote URIs). Returns
+    * the copied entries. */
+  def copyMetadataRaw(srcPaths: Seq[String], runRoot: String, jobName: String,
+      conf: Configuration): Seq[String] = {
+    val outDir = new Path(s"$runRoot/$jobName/metadata")
+    val outFs = outDir.getFileSystem(conf)
     srcPaths.map { p =>
-      java.nio.file.Files.createDirectories(outDir)
-      val src = java.nio.file.Paths.get(p)
-      def copy(s: java.nio.file.Path, d: java.nio.file.Path): Unit =
-        if (java.nio.file.Files.isDirectory(s)) {
-          java.nio.file.Files.createDirectories(d)
-          // Files.list leaks a directory handle until closed — deep/wide
-          // trees would exhaust file descriptors without the try/finally
-          val st = java.nio.file.Files.list(s)
-          try st.forEach(c => copy(c, d.resolve(c.getFileName)))
-          finally st.close()
-        } else
-          java.nio.file.Files.copy(s, d,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val dest = outDir.resolve(src.getFileName)
-      copy(src, dest)
+      val src = new Path(p)
+      val dest = new Path(outDir, src.getName)
+      if (!FileUtil.copy(src.getFileSystem(conf), src, outFs, dest,
+          false, true, conf))
+        throw new java.io.IOException(s"metadata copy failed: $src to $dest")
       dest.toString
     }
   }

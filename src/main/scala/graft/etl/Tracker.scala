@@ -1,5 +1,8 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+
 /** Lineage/discrepancy summary replacing the reference's `ETLTracker`
   * process (`tracker.py:15-405`; summary shape `README.md:467-493`): counts
   * per stage (listed → transformed → uploaded) for data and metadata, and
@@ -39,15 +42,23 @@ final case class RunReport(totalTimeSeconds: Double, jobs: Seq[JobReport]) {
 }
 
 object Tracker {
-  def countFiles(dir: String): Long = {
-    val root = new java.io.File(dir)
-    if (!root.exists()) 0L
-    else {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum
-        else if (f.getName.endsWith(".parquet")) 1L
-        else 0L
-      walk(root)
-    }
+
+  /** Parquet files under `dir` (any depth) on its file system, local or
+    * remote; 0 when `dir` does not exist. */
+  def countFiles(dir: String, conf: Configuration): Long = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    // listStatus, not listFiles: without Hadoop's native library a located
+    // status on the local file system starts a process per file
+    def walk(p: Path): Long = fs.listStatus(p).map { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet")) 1L
+      else 0L
+    }.sum
+    if (fs.exists(root)) walk(root) else 0L
   }
+
+  /** [[countFiles]] under a default Hadoop configuration (local paths and
+    * `file:` URIs). */
+  def countFiles(dir: String): Long = countFiles(dir, new Configuration())
 }

@@ -514,9 +514,9 @@ object Clustering {
   // ---------------------------------------------------------------------
 
   /** Persist an [[IvfPqIndex]] under `indexDir`:
-    * `codes/` partitioned by `cell` (the pruning axis) through
-    * [[graft.etl.Sink.writeDataSized]]'s small-files discipline — one
-    * writer task per cell, `maxRecordsPerFile` re-splitting oversized
+    * `codes/` partitioned by `cell` (the pruning axis) under the
+    * small-files discipline of [[graft.etl.Sink.writeData]] — one writer
+    * task per cell, here with `maxRecordsPerFile` re-splitting oversized
     * cells — plus tiny `codebook/` and `centroids/` side tables. Codes
     * also keep `vec_id` MIN/MAX per file via a [[graft.etl.ZoneMaps]]
     * manifest, so corpus-slice searches (e.g. "only vectors ingested

@@ -32,9 +32,11 @@ class BucketingSpec extends SparkSpec {
     assert(joined.except(expect).isEmpty && expect.except(joined).isEmpty)
   }
 
-  test("writeDataSized bounds files per partition dir; plain write scatters by task") {
+  test("writeData bounds files per partition dir; plain write scatters by task") {
     val dir = "/root/testdata/sf0.001"
-    val events = Tables.events(spark, dir).repartition(8) // simulate many input splits
+    // event_type as the partition column writeData knows
+    val events = Tables.events(spark, dir).withColumnRenamed("event_type", "county")
+      .repartition(8) // simulate many input splits
     def filesPerDir(root: String): Map[String, Int] = {
       val base = new java.io.File(root)
       base.listFiles().filter(_.isDirectory).map { d =>
@@ -43,22 +45,28 @@ class BucketingSpec extends SparkSpec {
     }
     val tmp = java.nio.file.Files.createTempDirectory("graft_sized").toString
     // plain dynamic-partition write: up to one file per (task × value)
-    events.write.mode("overwrite").partitionBy("event_type").parquet(s"$tmp/plain")
+    events.write.mode("overwrite").partitionBy("county").parquet(s"$tmp/plain")
     val plain = filesPerDir(s"$tmp/plain")
     assert(plain.values.max > 1, s"fixture must reproduce the scatter: $plain")
-    // sized write: exactly one task per partition value → 1 file each
-    val out = Sink.writeDataSized(events, tmp, "sized",
-      partCols = Seq("event_type"), writeTasksPerPartition = 1)
+    // clustered write: one task per partition value → 1 file each
+    val out = Sink.writeData(events, tmp, "sized")
     val sized = filesPerDir(out)
     assert(sized.values.forall(_ == 1), s"one file per dir expected: $sized")
-    // and maxRecordsPerFile re-splits oversized files: ~200 rows per type
-    val out2 = Sink.writeDataSized(events, tmp, "sized_split",
-      partCols = Seq("event_type"), maxRecordsPerFile = 100L)
+    // a directory larger than AQE's advisory size splits across tasks; the
+    // split needs several map outputs, so the input comes in 8 splits
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    val out2 =
+      try Sink.writeData(spark.range(0, 40000, 1, 8).select(col("id"),
+        (col("id") % 2).cast("string").as("county")), tmp, "sized_split")
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     val split = filesPerDir(out2)
-    assert(split.values.forall(n => n >= 2 && n <= 3), s"~rows/100 files: $split")
+    assert(split.size === 2 && split.values.forall(_ >= 2), s"oversized dirs split: $split")
     // rows survive both layouts
     assert(spark.read.parquet(out).count() === events.count())
-    assert(spark.read.parquet(out2).count() === events.count())
+    assert(spark.read.parquet(out2).count() === 40000L)
+    assert(spark.read.parquet(out2).distinct().count() === 40000L)
   }
 
   test("mismatched bucket counts fall back to a correct (shuffling) join") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.config.{EtlConfig, EtlSettings, JobSpec}
 import graft.etl._
+import graft.operators.HourlyRollup
 
 /** End-to-end pipeline test mirroring the reference's integration test
   * (`etl/tests/test_etl_integration.py`) against the local filesystem:
@@ -49,6 +50,21 @@ class EtlPipelineSpec extends SparkSpec {
   }
 
   private val dataPartition = "timeseries_individual_buildings/by_state"
+
+  /** NV under its own release, its buildings split over two `county=`
+    * directories (by id parity). A separate release: a `county=` level
+    * under some states only would make the read of `test_release`'s whole
+    * tree ambiguous. Returns NV's `upgrade=0/state=NV` prefix. */
+  private def buildCountyTree(): String = {
+    val prefix = s"$lake/2024/county_release/$dataPartition/upgrade=0/state=NV"
+    graft.sources.Tables.events(spark, "/root/testdata/sf0.001")
+      .select(col("ts").as("timestamp"), col("user_id").as("bldg_id"),
+        col("value").as("load"), col("event_type").as("mode"),
+        when(col("user_id") % 2 === 0, "Clark").otherwise("Washoe").as("county"))
+      .repartition(3) // several input files per county
+      .write.mode("overwrite").partitionBy("county").parquet(prefix)
+    prefix
+  }
 
   private def job(state: String, upgrades: Seq[Int] = Seq(0)) = JobSpec(
     release_name = "test_release", release_year = "2024", state = state,
@@ -221,5 +237,50 @@ class EtlPipelineSpec extends SparkSpec {
       assert(files.nonEmpty && files.forall(f => prefixes.exists(p => f.startsWith(p + "/"))),
         s"${j.state} indexed files outside its prefixes: ${files.mkString(", ")}")
     }
+  }
+
+  test("a run over file: URIs reads, writes, copies and counts through them, writing nothing elsewhere") {
+    buildSourceTree()
+    val out = Files.createTempDirectory("graft_out").toString
+    val cfg = EtlConfig(EtlSettings(base_partition = s"file:$lake", output_dir = s"file:$out"),
+      Seq(job("AK").copy(metadata_root_dir = s"file:$lake/meta")))
+    val result = EtlRunner.run(spark, cfg)
+    assert(result.runRoot.startsWith(s"file:$out/"))
+    val report = result.report.jobs.head
+    val dataOut = s"${result.runRoot.stripPrefix("file:")}/test_release_2024_ak_job0/data"
+    assert(report.dataFilesWritten > 0 && report.dataFilesWritten === Tracker.countFiles(dataOut))
+    assert(!report.lostOutput)
+    assert(report.metadataFilesListed > 0 &&
+      report.metadataFilesWritten === report.metadataFilesListed)
+    assertSavedQueries(result, 0, "AK")
+    // a file: URI taken for a relative local path lands under the working
+    // directory, as ./file:/<output_dir>/...
+    assert(!new java.io.File(s"file:$out").exists(), "stray directory under the working directory")
+  }
+
+  test("every county directory of a two-county run holds one data file; rows equal the rollup") {
+    val prefix = buildCountyTree()
+    val nv = job("NV").copy(release_name = "county_release")
+    // With coalescing off the rollup's 4 shuffle partitions each hold rows
+    // of both counties, so a write without clustering makes 4 files a county.
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try {
+      val result = EtlRunner.run(spark, config(nv))
+      val dataOut = s"${result.runRoot}/${nv.jobName(0)}/data"
+      val counties = new java.io.File(s"$dataOut/upgrade=0/state=NV").listFiles()
+        .filter(_.isDirectory).sortBy(_.getName).toSeq
+      assert(counties.map(_.getName) === Seq("county=Clark", "county=Washoe"))
+      counties.foreach { d =>
+        val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length === 1, s"${d.getName}: ${files.mkString(", ")}")
+      }
+      assert(result.report.jobs.head.dataFilesWritten === 2L)
+      val input = spark.read.option("basePath", s"$lake/2024/county_release/$dataPartition")
+        .parquet(prefix)
+      val expect = HourlyRollup(input, passThrough = Seq("upgrade", "state", "county"))
+      val written = spark.read.parquet(dataOut).select(expect.columns.map(col).toSeq: _*)
+      assert(written.exceptAll(expect).isEmpty && expect.exceptAll(written).isEmpty)
+    } finally spark.conf.unset(key)
   }
 }

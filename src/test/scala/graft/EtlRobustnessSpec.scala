@@ -27,7 +27,8 @@ class EtlRobustnessSpec extends SparkSpec {
     graft.sources.Tables.nation(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").parquet(src)
     val runRoot = Files.createTempDirectory("graft_raw_out").toString
-    val Seq(out) = Sink.copyMetadataRaw(Seq(src), runRoot, "job0")
+    val Seq(out) = Sink.copyMetadataRaw(Seq(src), runRoot, "job0",
+      spark.sparkContext.hadoopConfiguration)
     assert(out === s"$runRoot/job0/metadata/meta.parquet")
     def md5s(dir: String): Map[String, String] = {
       val d = java.nio.file.Paths.get(dir)

@@ -583,4 +583,60 @@ class PlanGuardSpec extends SparkSpec {
         "reliable checkpoint lost the restored layout")
     } finally spark.conf.unset("spark.graft.closure.reliableCheckpoint")
   }
+
+  test("etl write: one rebalance exchange above the rollup's hash exchange; none without partition columns") {
+    // Sink.writeData clusters by the partition columns AFTER the rollup, so
+    // each county directory gets one writer; a rebalance below the
+    // aggregate could not be split by AQE, and a frame without partition
+    // columns must not pay a shuffle at all.
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, REBALANCE_PARTITIONS_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val input = graft.sources.Tables.events(spark, d)
+      .select(col("ts").as("timestamp"), col("user_id").as("bldg_id"), col("value").as("load"),
+        (col("user_id") % 2).cast("int").as("upgrade"), col("event_type").as("state"),
+        (col("user_id") % 3).cast("string").as("county"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_write_plan").toString
+    def writePlan(write: => Unit): SparkPlan = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+          plans.add(qe.executedPlan); ()
+        }
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        write
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val writes = plans.toArray(Array.empty[SparkPlan])
+        .filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      assert(writes.length === 1, writes.mkString("\n"))
+      writes.head
+    }
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeExec] =
+      aqe.collect(p) { case e: ShuffleExchangeExec => e }
+
+    val rolled = graft.operators.HourlyRollup(input, passThrough = Seq("upgrade", "state", "county"))
+    val p = writePlan(graft.etl.Sink.writeData(rolled, tmp, "rolled"))
+    val rebalance = exchanges(p).filter(_.shuffleOrigin == REBALANCE_PARTITIONS_BY_COL)
+    assert(rebalance.size === 1, p)
+    val keys = rebalance.head.outputPartitioning match {
+      case h: HashPartitioning => h.references.map(_.name).toSet
+      case other => fail(s"rebalance by $other")
+    }
+    assert(keys === Set("upgrade", "state", "county"), p)
+    val below = exchanges(rebalance.head.child)
+    assert(below.size === 1 && below.head.shuffleOrigin == ENSURE_REQUIREMENTS &&
+      below.head.toString.contains("hashpartitioning(timestamp"), p)
+    assert(exchanges(p).size === 2, p)
+
+    val flat = writePlan(graft.etl.Sink.writeData(input.drop("upgrade", "state", "county"), tmp, "flat"))
+    assert(exchanges(flat).isEmpty, flat)
+  }
 }
