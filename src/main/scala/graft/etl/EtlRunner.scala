@@ -1,5 +1,9 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
@@ -119,27 +123,41 @@ object EtlRunner {
   def sliceKey(job: graft.config.JobSpec, upgrade: Int): String =
     s"${job.release_name}/${job.release_year}/${job.state}/upgrade=$upgrade"
 
-  def loadManifest(path: String): Set[String] = {
-    val f = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(f))
-      scala.jdk.CollectionConverters.ListHasAsScala(
-        java.nio.file.Files.readAllLines(f)).asScala.filter(_.nonEmpty).toSet
-    else Set.empty
+  /** The slice keys recorded in the manifest at `path` (local path or any
+    * Hadoop file system URI); empty when there is no manifest yet. */
+  def loadManifest(path: String, conf: Configuration = new Configuration()): Set[String] =
+    readLines(new Path(path), conf).filter(_.nonEmpty).toSet
+
+  /** Add `keys` to the manifest at `path`. The whole manifest is rewritten
+    * to a hidden sibling and renamed over the old one (object stores have
+    * no append), so a crash leaves either the old manifest or the new one. */
+  def appendManifest(path: String, keys: Seq[String], conf: Configuration = new Configuration()): Unit = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val dest = fs.makeQualified(p)
+    val tmp = new Path(dest.getParent, s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val lines = readLines(dest, conf) ++ keys
+    val out = fs.create(tmp, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    FileContext.getFileContext(dest.toUri, conf).rename(tmp, dest, Options.Rename.OVERWRITE)
   }
 
-  def appendManifest(path: String, keys: Seq[String]): Unit = {
-    // toAbsolutePath: a bare relative filename has a null getParent
-    val f = java.nio.file.Paths.get(path).toAbsolutePath
-    java.nio.file.Files.createDirectories(f.getParent)
-    java.nio.file.Files.write(f, keys.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+  private def readLines(p: Path, conf: Configuration): Seq[String] = {
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Nil
+    else {
+      val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
+      try src.getLines().toList finally src.close()
+    }
   }
 
   /** Process only the (job, upgrade) slices not yet in the manifest; record
     * the newly processed slices on success. Returns None when everything is
     * already up to date (no Spark job runs at all). */
   def runIncremental(spark: SparkSession, config: EtlConfig, manifestPath: String): Option[EtlResult] = {
-    val done = loadManifest(manifestPath)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val done = loadManifest(manifestPath, conf)
     val pending = config.job_specific
       .map(j => j.copy(upgrades = j.upgrades.filterNot(u => done(sliceKey(j, u)))))
       .filter(_.upgrades.nonEmpty)
@@ -147,7 +165,7 @@ object EtlRunner {
     else {
       val result = run(spark, config.copy(job_specific = pending))
       appendManifest(manifestPath,
-        pending.flatMap(j => j.upgrades.map(u => sliceKey(j, u))))
+        pending.flatMap(j => j.upgrades.map(u => sliceKey(j, u))), conf)
       Some(result)
     }
   }

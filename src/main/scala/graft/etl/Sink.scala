@@ -107,7 +107,8 @@ object Sink {
     * readers of `latest` never observe the bad batch.
     *
     * Same atomic-rename publish contract as [[graft.etl.Layout.optimize]]
-    * (TimeTravel.listRuns only matches final stamp names). Returns the
+    * (TimeTravel.listRuns only matches final stamp names). `outputDir`
+    * may be a local path or any Hadoop file system URI. Returns the
     * published run stamp. */
   def writeAudited(df: DataFrame, outputDir: String, jobName: String,
       checks: Seq[graft.operators.Validation.Check],
@@ -116,13 +117,14 @@ object Sink {
     val spark = df.sparkSession
     val runRootPath = runRoot(outputDir, at)
     val stamp = runRootPath.substring(outputDir.length + 1)
-    val staging = new java.io.File(s"$outputDir/.staging-$stamp")
-    val dest = new java.io.File(runRootPath)
-    require(!dest.exists(), s"run $stamp already exists — runs are immutable")
+    val staging = new Path(s"$outputDir/.staging-$stamp")
+    val dest = new Path(runRootPath)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!fs.exists(dest), s"run $stamp already exists — runs are immutable")
     df.write.mode("overwrite").option("compression", "snappy")
-      .parquet(s"${staging.getPath}/$jobName/data")
+      .parquet(s"$staging/$jobName/data")
     val verdicts = graft.operators.Validation
-      .suite(spark.read.parquet(s"${staging.getPath}/$jobName/data"),
+      .suite(spark.read.parquet(s"$staging/$jobName/data"),
         checks, refIntegrity)
       .collect() // constraint-count-sized
     val failed = verdicts.filter(_.getLong(2) == 0L).map(_.getString(0))
@@ -130,8 +132,8 @@ object Sink {
       throw new IllegalStateException(
         s"write-audit-publish REFUSED for $jobName: failed checks " +
           failed.mkString("[", ", ", "]") +
-          s" — quarantined batch left at ${staging.getPath} for inspection")
-    if (!staging.renameTo(dest))
+          s" — quarantined batch left at $staging for inspection")
+    if (!fs.rename(staging, dest))
       throw new java.io.IOException(
         s"publish failed: could not rename $staging to $dest")
     stamp

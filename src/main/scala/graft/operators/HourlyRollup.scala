@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
+import graft.functions.RoundedMeansAgg
+
 /** The reference's core ETL transform (SURVEY.md §2.4 A1–A5): floor the
   * timestamp column to the hour, hash-group by (timestamp, building id),
   * aggregate EVERY column with dtype-driven rules (floating → mean, anything
@@ -13,17 +15,30 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
   * float aggregate to 7 decimal places (`worker.py:14,127-135`).
   *
   * Spark-first design notes (100 TB posture):
-  *  - `date_trunc` + `groupBy` stays inside whole-stage codegen; the single
-  *    shuffle is on (hour, id) — high-cardinality and uniform, so no skew.
-  *  - Partial aggregation (map-side combine) is automatic for min/avg, so
-  *    the shuffle carries one row per (hour, id) per input partition, not
-  *    per 15-minute reading.
+  *  - The single shuffle is on (hour, id) — high-cardinality and uniform,
+  *    so no skew. Partial aggregation (map-side combine) runs for every
+  *    aggregate, so the shuffle carries one row per (hour, id) per input
+  *    partition, not per 15-minute reading.
+  *  - Every floating column's rounded mean comes out of ONE
+  *    [[graft.functions.RoundedMeansAgg]], not one `round(avg(c), 7)` per
+  *    column. A ComStock-width file has ~100 floating columns; 100 `avg`s
+  *    carry 200 buffer fields, past `spark.sql.codegen.maxFields`, so the
+  *    aggregate left whole-stage codegen anyway and ran through generated
+  *    buffer projections with hundreds of slots, which a cold run spends
+  *    most of its CPU compiling (Janino, then the JIT). The one imperative
+  *    aggregate keeps the same fixed-width (sum, count) buffer slots in the
+  *    Tungsten map and folds them in two plain loops; its results are
+  *    bit for bit those of `round(avg(c), 7)` (RoundedMeansAggSpec).
   *  - The agg-rule synthesis is plan construction over `df.schema` (ordinary
-  *    Scala), not a runtime UDF — zero interpretation overhead per row.
+  *    Scala), not a runtime UDF.
   */
 object HourlyRollup {
 
   val DecimalPlaces = 7 // reference worker.py:14
+
+  /** The rolled-up array of rounded means, before [[apply]] projects it to
+    * one `{col}_mean` column per floating column. */
+  private val MeansCol = "__rounded_means"
 
   /** Floor `tsCol` to the hour in the session time zone (UTC — the reference
     * computes the floor in epoch-ms UTC space, `worker.py:76-97`). */
@@ -55,17 +70,23 @@ object HourlyRollup {
     val keys: Seq[String] =
       (if (df.columns.contains(idCol)) Seq(tsCol, idCol) else Seq(tsCol)) ++ pt
 
-    val aggs: Seq[Column] = floored.schema.fields.toSeq
-      .filterNot(f => pt.contains(f.name))
-      .map { f =>
-        if (isFloating(f.dataType))
-          round(avg(col(f.name)), DecimalPlaces).as(s"${f.name}_mean")
-        else
-          min(col(f.name)).as(s"${f.name}_min")
-      }
+    val fields = floored.schema.fields.toSeq.filterNot(f => pt.contains(f.name))
+    val (meanFields, minFields) = fields.partition(f => isFloating(f.dataType))
+    val aggs: Seq[Column] =
+      minFields.map(f => min(col(f.name)).as(s"${f.name}_min")) ++
+        (if (meanFields.isEmpty) Nil
+         else Seq(RoundedMeansAgg.roundedMeans(meanFields.map(f => col(f.name)), DecimalPlaces)
+           .as(MeansCol)))
+    val meanAt = meanFields.map(_.name).zipWithIndex.toMap
     floored
       .groupBy(keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
+      .select(keys.map(col) ++ fields.map { f =>
+        meanAt.get(f.name) match {
+          case Some(i) => col(MeansCol).getItem(i).as(s"${f.name}_mean")
+          case None => col(s"${f.name}_min")
+        }
+      }: _*)
   }
 
   // ---------------------------------------------------------------------

@@ -92,4 +92,20 @@ class EtlRobustnessSpec extends SparkSpec {
     assert(EtlRunner.loadManifest(manifest) ===
       Set("rel/2024/AK/upgrade=0", "rel/2024/AK/upgrade=1"))
   }
+
+  test("incremental manifest on a file: URI lands at that path and is rewritten, not appended") {
+    val dir = Files.createTempDirectory("graft_inc_uri").toString
+    val manifest = s"file:$dir/manifest/processed.txt"
+    EtlRunner.appendManifest(manifest, Seq("rel/2024/AK/upgrade=0"))
+    EtlRunner.appendManifest(manifest, Seq("rel/2024/AK/upgrade=1"))
+    val local = java.nio.file.Paths.get(dir, "manifest", "processed.txt")
+    assert(java.nio.file.Files.readAllLines(local).toArray.toSeq ===
+      Seq("rel/2024/AK/upgrade=0", "rel/2024/AK/upgrade=1"))
+    // no staged copy left beside it
+    assert(new java.io.File(s"$dir/manifest").list().filter(_.endsWith(".tmp")).isEmpty)
+    val keys = Set("rel/2024/AK/upgrade=0", "rel/2024/AK/upgrade=1")
+    assert(EtlRunner.loadManifest(manifest) === keys)
+    assert(EtlRunner.loadManifest(local.toString) === keys)
+    assert(EtlRunner.loadManifest(s"file:$dir/manifest/absent.txt").isEmpty)
+  }
 }

@@ -138,6 +138,23 @@ class LayoutSpec extends SparkSpec {
     assert(TimeTravel.readLatest(spark, outputDir, "job").count() === 2L)
   }
 
+  test("write-audit-publish on a file: URI output dir publishes at that path") {
+    import graft.operators.Validation
+    val dir = Files.createTempDirectory("graft_wap_uri").toString
+    val good = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val stamp = Sink.writeAudited(good, s"file:$dir", "job",
+      Seq(Validation.uniqueness(Seq("id"))),
+      at = java.time.Instant.ofEpochSecond(1000000000L))
+    assert(TimeTravel.listRuns(dir) === Seq(stamp))
+    assert(!new java.io.File(dir).list().exists(_.startsWith(".staging")))
+    assert(spark.read.parquet(s"file:$dir/$stamp/job/data").count() === 2L)
+    val e = intercept[IllegalArgumentException] {
+      Sink.writeAudited(good, s"file:$dir", "job", Nil,
+        at = java.time.Instant.ofEpochSecond(1000000000L))
+    }
+    assert(e.getMessage.contains("immutable"))
+  }
+
   test("key erasure rewrites only affected partitions and removes emptied ones") {
     val dir = Files.createTempDirectory("graft_erase").toString + "/t"
     Seq(

@@ -639,4 +639,30 @@ class PlanGuardSpec extends SparkSpec {
     val flat = writePlan(graft.etl.Sink.writeData(input.drop("upgrade", "state", "county"), tmp, "flat"))
     assert(exchanges(flat).isEmpty, flat)
   }
+
+  test("rollup of a 100-float-column frame: one RoundedMeansAgg per aggregate stage, no per-column avg or round") {
+    // 100 avg's would carry 200 buffer fields — past codegen.maxFields —
+    // and JIT-compile hundreds of generated buffer-projection slots; one
+    // imperative aggregate per stage, its fixed-width buffer in the hash map.
+    import org.apache.spark.sql.catalyst.expressions.RoundBase
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Average
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 64, 1, 2).select(
+      Seq(timestamp_seconds(col("id") * 900).as("timestamp"), (col("id") % 4).as("bldg_id")) ++
+        (0 until 100).map(i => (col("id") * (i + 1) / 7.0).as(s"c$i")): _*)
+    val rolled = graft.operators.HourlyRollup(df)
+    rolled.collect()
+    val p = rolled.queryExecution.executedPlan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val aggs = aqe.collect(p) { case a: BaseAggregateExec => a }
+    assert(aggs.size === 2 && aggs.forall(_.isInstanceOf[HashAggregateExec]), p)
+    for (a <- aggs)
+      assert(a.aggregateExpressions.count(
+        _.aggregateFunction.isInstanceOf[graft.functions.RoundedMeansAgg]) === 1, a)
+    val exprs = aqe.flatMap(p)(_.expressions)
+    assert(!exprs.exists(_.exists(e => e.isInstanceOf[Average] || e.isInstanceOf[RoundBase])), p)
+    assert(rolled.columns.count(_.endsWith("_mean")) === 100)
+  }
 }
