@@ -1,56 +1,53 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.util.concurrent.atomic.AtomicInteger
 
-import graft.functions.TextHash
-import graft.operators.Dedup
-import graft.sources.Tables
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
-/** Ad-hoc stage timing for the MinHash pipeline (builder tooling). */
+/** Targeted timing of named bench rows, Bench's way (one untimed warm-up
+  * run, then a timed `noop` write, on Bench's session settings), with the
+  * Spark jobs, stages and SQL executions each timed run started. Counts do
+  * not drift with host load, so a paired A/B of two commits reads them
+  * next to the wall time. Cores come from `SPARK_GRAFT_CPUS` (default
+  * 32) exactly as for [[Bench]], so a row probed here runs at the width
+  * Bench timed it at.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> [SPARK_GRAFT_CPUS=<n>] runMain graft.BenchProbe <row> [row ...]
+  */
 object BenchProbe {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: BenchProbe <row> [row ...] (SparkEntry.queries names)")
+    val unknown = args.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // CLAUDE.md invariant: TopKAgg queries (s8 et al.) silently pay a ~7×
-      // sort-based fallback without this — probe numbers must match Bench's.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    def time(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"[probe] $name%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-    }
-    // With query names as args: time just those SparkEntry queries (warm
-    // run after an untimed one) and exit — targeted regression checks
-    // without the full Bench sweep.
-    if (args.nonEmpty) {
-      args.foreach { name =>
-        val q = SparkEntry.queries(name)
-        q(spark, sfDir).write.format("noop").mode("overwrite").save()
-        time(name)(q(spark, sfDir).count())
+    val (jobs, stages, execs) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _ => ()
       }
-      spark.stop()
-      return
+    })
+    args.foreach { name =>
+      def run(): Unit = SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      spark.catalog.clearCache()
+      run()
+      spark.catalog.clearCache()
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      val (j0, s0, e0) = (jobs.get, stages.get, execs.get)
+      val t0 = System.nanoTime()
+      run()
+      val secs = (System.nanoTime() - t0) / 1e9
+      ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      println(f"[probe] $name%-22s $secs%8.2f s  jobs=${jobs.get - j0} " +
+        s"stages=${stages.get - s0} sqlExecs=${execs.get - e0}")
     }
-    val docs = Tables.documents(spark, sfDir)
-    time("shingles") { Dedup.shingleHashes(docs).count() }
-    val sh = Dedup.shingleHashes(docs).cache()
-    sh.count()
-    time("sig") { Dedup.minhashSignatures(sh).count() }
-    val bands = Dedup.lshBands(Dedup.minhashSignatures(sh)).cache()
-    time("bands") { bands.count() }
-    val l = bands.select(col("doc_id").as("doc_a"), col("band"), col("band_key"))
-    val r = bands.select(col("doc_id").as("doc_b"), col("band"), col("band_key"))
-    time("cands") {
-      l.join(r, Seq("band", "band_key")).filter(col("doc_a") < col("doc_b"))
-        .select("doc_a", "doc_b").distinct().count()
-    }
-    time("full_minhashPairs") { Dedup.minhashPairs(docs).count() }
-    time("full_again") { Dedup.minhashPairs(docs).count() }
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -14,10 +13,7 @@ import graft.operators.Dedup
 object CCScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 4000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong(0)
     val stages = new java.util.concurrent.atomic.AtomicLong(0)

@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries (plan-audit
   * tooling: verify pushdown/pruning/broadcast/codegen choices survive). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq else Bench.headline
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, HourlyRollup, Similarity}
@@ -20,16 +20,8 @@ import graft.sources.Tables
 object ScalingProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      // Grouped bounded aggregates (TopKAgg) on high-cardinality keys:
-      // the default 128-key limit silently falls back to sort-based
-      // aggregation, re-sorting every candidate row (measured 2x on ADC).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(32)
+      .config("spark.sql.shuffle.partitions", 64)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -449,7 +441,8 @@ object ScalingProbe {
     // no per-group value buffer at 100k scores/lang). The scored frame is
     // cached (Quantiles' two-pass input contract + the totals branch =
     // three evaluations of the expensive scoring projection otherwise —
-    // measured 32 s → ~4 s; see P14Probe).
+    // measured 32 s → ~4 s; see
+    // `git show d600ca6:src/main/scala/graft/P14Probe.scala`).
     time("data_card_100k_docs") {
       val q = graft.operators.TextAnalysis.qualityScores(bigDocsLang, Seq(col("lang")))
         .select(col("lang"), col("n_tokens"),

@@ -1,28 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name,name…]
+  * The optional third argument restricts the dump (results and
+  * oracle_sql.json) to a comma-separated subset of query names, so
+  * tools/check_correctness.py checks just those — fast iteration on one
+  * query without re-running the whole suite. The correctness gate calls it
+  * with two arguments (the full dump). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated query-name subset for fast local
-    // iteration (the driver always calls with two args → full run).
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet)
+      else None
+    only.foreach { names =>
+      require(names.nonEmpty, "empty query subset")
+      val unknown = names.diff(SparkEntry.queries.keySet)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Grouped bounded aggregates (TopKAgg) on high-cardinality keys:
-      // the default 128-key limit silently falls back to sort-based
-      // aggregation, re-sorting every candidate row (measured 2x on ADC).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>

@@ -116,7 +116,7 @@ object Layout {
       jobName: String, colA: String, colB: String,
       targetBytes: Long = 128L * 1024 * 1024,
       at: java.time.Instant = java.time.Instant.now()): String = {
-    val runs = TimeTravel.listRuns(outputDir)
+    val runs = TimeTravel.listRuns(outputDir, spark.sparkContext.hadoopConfiguration)
     require(runs.nonEmpty, s"no runs to optimize under $outputDir")
     val srcData = s"$outputDir/${runs.last}/$jobName/data"
     val bytes = Compaction.dirBytes(srcData)

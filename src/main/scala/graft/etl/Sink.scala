@@ -59,7 +59,7 @@ object Sink {
     * Place it after any aggregation, as [[writeData]] does with the rollup:
     * below an aggregate AQE must undo a skew split, which would break the
     * aggregate's clustering, and a large county would become one task. */
-  private def clusteredByPartition(df: DataFrame, partCols: Seq[String]): DataFrame =
+  private[graft] def clusteredByPartition(df: DataFrame, partCols: Seq[String]): DataFrame =
     if (partCols.isEmpty) df else df.hint("rebalance", partCols.map(col): _*)
 
   /** Bucketed managed table: pre-shuffles data into `nBuckets` by the join

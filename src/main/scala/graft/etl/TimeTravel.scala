@@ -1,9 +1,7 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Run-level time travel and retention over [[Sink.runRoot]]'s stamped
@@ -23,6 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * that resolved "latest" before N subsequent publishes) can still have
   * its run vacuumed out from under it; such readers need a retention
   * window (`keep`) matched to publish rate × read duration.
+  *
+  * `outputDir` may be a local path or any Hadoop file system URI (`file:`,
+  * remote), as for [[Sink.writeAudited]], which publishes the runs.
   */
 object TimeTravel {
 
@@ -32,16 +33,11 @@ object TimeTravel {
   /** Run stamps under `outputDir`, oldest → newest (lexicographic order of
     * the stamp format IS chronological order). Non-run entries (manifests,
     * `_`-prefixed markers) are ignored. */
-  def listRuns(outputDir: String): Seq[String] = {
-    val root = Paths.get(outputDir)
-    if (!Files.isDirectory(root)) Seq.empty
-    else {
-      val stream = Files.list(root)
-      val names =
-        try stream.iterator().asScala.map(_.getFileName.toString).toSeq
-        finally stream.close()
-      names.filter(stampRe.matches(_)).sorted
-    }
+  def listRuns(outputDir: String, conf: Configuration): Seq[String] = {
+    val root = new Path(outputDir)
+    val fs = root.getFileSystem(conf)
+    if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath.getName).filter(stampRe.matches(_)).sorted
   }
 
   /** Read one job's data at a specific run stamp. */
@@ -52,7 +48,7 @@ object TimeTravel {
   /** Read the newest run (the default-table view). */
   def readLatest(spark: SparkSession, outputDir: String,
       jobName: String): DataFrame = {
-    val runs = listRuns(outputDir)
+    val runs = listRuns(outputDir, spark.sparkContext.hadoopConfiguration)
     require(runs.nonEmpty, s"no runs under $outputDir")
     readRun(spark, outputDir, runs.last, jobName)
   }
@@ -76,7 +72,7 @@ object TimeTravel {
   def readAcross(spark: SparkSession, outputDir: String, jobName: String,
       defaults: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val runs = listRuns(outputDir)
+    val runs = listRuns(outputDir, spark.sparkContext.hadoopConfiguration)
     require(runs.nonEmpty, s"no runs under $outputDir")
     val frames = runs.map(r =>
       readRun(spark, outputDir, r, jobName).withColumn("__run", lit(r)))
@@ -89,17 +85,12 @@ object TimeTravel {
   /** Delete all but the newest `keep` runs; returns the deleted stamps.
     * Refuses keep < 1 (a vacuum that can delete the only run is a
     * different operation — table drop — and should look like one). */
-  def vacuum(outputDir: String, keep: Int): Seq[String] = {
+  def vacuum(outputDir: String, keep: Int, conf: Configuration): Seq[String] = {
     require(keep >= 1, s"vacuum keep must be >= 1, got $keep")
-    val victims = listRuns(outputDir).dropRight(keep)
-    victims.foreach { run => deleteRecursively(Paths.get(outputDir, run)) }
+    val root = new Path(outputDir)
+    val fs = root.getFileSystem(conf)
+    val victims = listRuns(outputDir, conf).dropRight(keep)
+    victims.foreach { run => fs.delete(new Path(root, run), true) }
     victims
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val stream = Files.walk(p)
-      val paths = try stream.iterator().asScala.toSeq.reverse finally stream.close()
-      paths.foreach(Files.deleteIfExists(_))
-    }
 }

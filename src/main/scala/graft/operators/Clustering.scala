@@ -514,24 +514,19 @@ object Clustering {
   // ---------------------------------------------------------------------
 
   /** Persist an [[IvfPqIndex]] under `indexDir`:
-    * `codes/` partitioned by `cell` (the pruning axis) under the
-    * small-files discipline of [[graft.etl.Sink.writeData]] — one writer
-    * task per cell, here with `maxRecordsPerFile` re-splitting oversized
-    * cells — plus tiny `codebook/` and `centroids/` side tables. Codes
+    * `codes/` partitioned by `cell` (the pruning axis) and clustered by it
+    * first as [[graft.etl.Sink.writeData]] clusters its partitions — one
+    * writer task per cell, a hot cell split by AQE's advisory partition
+    * size — plus tiny `codebook/` and `centroids/` side tables. Codes
     * also keep `vec_id` MIN/MAX per file via a [[graft.etl.ZoneMaps]]
     * manifest, so corpus-slice searches (e.g. "only vectors ingested
     * after X" on an ingest-ordered id) prune a second axis WITHIN the
     * probed cells. Layout is immutable-once-written; version by writing a
     * new `indexDir` (TimeTravel's run-stamp convention composes here). */
-  def ivfPqWriteIndex(index: IvfPqIndex, indexDir: String,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    // Route every cell to one writer task (codes rows are ~40 bytes; a
-    // cell at 100 TB scale still splits via maxRecordsPerFile).
-    index.codes
-      .repartition(col("cell"))
+  def ivfPqWriteIndex(index: IvfPqIndex, indexDir: String): Unit = {
+    graft.etl.Sink.clusteredByPartition(index.codes, Seq("cell"))
       .write.mode("overwrite")
       .option("compression", "snappy")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("cell")
       .parquet(s"$indexDir/codes")
     index.codebook.write.mode("overwrite").parquet(s"$indexDir/codebook")
@@ -711,8 +706,7 @@ object Clustering {
     * new run-stamped dir (the TimeTravel composition) when recall decays.
     * Returns the number of vectors actually appended. */
   def ivfPqAppendStored(newVecs: DataFrame, indexDir: String, m: Int = 4,
-      subDim: Int = 16, cellBits: Int = 6,
-      maxRecordsPerFile: Long = 5000000L): Long = {
+      subDim: Int = 16, cellBits: Int = 6): Long = {
     val spark = newVecs.sparkSession
     val dir = new org.apache.hadoop.fs.Path(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -741,10 +735,9 @@ object Clustering {
         .localCheckpoint(true)
       val n = codes.count()
       if (n > 0) {
-        codes.repartition(col("cell"))
+        graft.etl.Sink.clusteredByPartition(codes, Seq("cell"))
           .write.mode("append")
           .option("compression", "snappy")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
           .partitionBy("cell")
           .parquet(s"$indexDir/codes")
         graft.etl.ZoneMaps.build(spark, s"$indexDir/codes",
@@ -778,21 +771,20 @@ object Clustering {
     * recall restored, old run untouched). */
   def optimizeIndex(corpus: DataFrame, indexRoot: String, m: Int = 4,
       subDim: Int = 16, k: Int = 8, cellBits: Int = 6,
-      at: java.time.Instant = java.time.Instant.now(),
-      maxRecordsPerFile: Long = 5000000L): String = {
+      at: java.time.Instant = java.time.Instant.now()): String = {
     val dest = graft.etl.Sink.runRoot(indexRoot, at)
-    require(!new java.io.File(dest).exists(),
-      s"optimizeIndex stamp collision: $dest already exists")
-    ivfPqWriteIndex(ivfPqIndex(corpus, m, subDim, k, cellBits), dest,
-      maxRecordsPerFile)
+    val destPath = new org.apache.hadoop.fs.Path(dest)
+    require(!destPath.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
+      .exists(destPath), s"optimizeIndex stamp collision: $dest already exists")
+    ivfPqWriteIndex(ivfPqIndex(corpus, m, subDim, k, cellBits), dest)
     dest
   }
 
   /** The newest run-stamped index directory under `indexRoot` (the serve
     * path's "latest" selector — pure path selection, same as
     * `TimeTravel.readLatest`). */
-  def latestIndexRun(indexRoot: String): String = {
-    val runs = graft.etl.TimeTravel.listRuns(indexRoot)
+  def latestIndexRun(spark: org.apache.spark.sql.SparkSession, indexRoot: String): String = {
+    val runs = graft.etl.TimeTravel.listRuns(indexRoot, spark.sparkContext.hadoopConfiguration)
     require(runs.nonEmpty, s"no index runs under $indexRoot")
     s"$indexRoot/${runs.last}"
   }

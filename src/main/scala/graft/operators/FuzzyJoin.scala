@@ -94,7 +94,8 @@ object FuzzyJoin {
     * ingest join cost is the new batch's neighborhood buckets, not the
     * corpus²: history is touched only as the hash-join build stream and
     * by two narrow id lookups, so ingest cost tracks batch size
-    * (IncrementalProbe `fuzzy_incr_*`).
+    * (the `fuzzy_incr_*` rows of
+    * `git show d600ca6:src/main/scala/graft/IncrementalProbe.scala`).
     *
     * Durability contract shared with the signature stores: writer lease
     * ([[graft.etl.WriterLease]]), staged `.staging-*` → atomic rename

@@ -207,7 +207,7 @@ class DeletionVectorSpec extends SparkSpec {
     // a crash-leftover staging dir must be swept, and while present it is
     // invisible to run listing (the atomic-flip property)
     assert(new java.io.File(tableRoot, ".staging-junk").mkdirs())
-    assert(graft.etl.TimeTravel.listRuns(tableRoot).isEmpty)
+    assert(graft.etl.TimeTravel.listRuns(tableRoot, hadoopConf).isEmpty)
     val run1 = DeletionVectors.applyDeletesAsRun(spark, dataDir, dvDir,
       tableRoot, jobName = "t",
       at = java.time.Instant.parse("2026-01-01T00:00:00Z"))
@@ -216,7 +216,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(md5s(new java.io.File(dataDir)) === before)
     assert(spark.read.parquet(dataDir).count() === 100)
     // the published run IS the folded table, resolved as latest
-    assert(graft.etl.TimeTravel.listRuns(tableRoot) === Seq("2026-01-01-00-00-00"))
+    assert(graft.etl.TimeTravel.listRuns(tableRoot, hadoopConf) === Seq("2026-01-01-00-00-00"))
     assert(run1.endsWith("2026-01-01-00-00-00/t/data"))
     assert(graft.etl.TimeTravel.readLatest(spark, tableRoot, "t")
       .select("id").as[Long].collect().sorted.toSeq === (10L until 100L))
@@ -230,7 +230,7 @@ class DeletionVectorSpec extends SparkSpec {
     DeletionVectors.addDeletes(spark, run1, dv2, col("id") < 20)
     DeletionVectors.applyDeletesAsRun(spark, run1, dv2, tableRoot,
       jobName = "t", at = java.time.Instant.parse("2026-01-02T00:00:00Z"))
-    assert(graft.etl.TimeTravel.listRuns(tableRoot) ===
+    assert(graft.etl.TimeTravel.listRuns(tableRoot, hadoopConf) ===
       Seq("2026-01-01-00-00-00", "2026-01-02-00-00-00"))
     assert(md5s(new java.io.File(run1)) === run1Md5)
     assert(graft.etl.TimeTravel.readLatest(spark, tableRoot, "t")

@@ -27,8 +27,8 @@ class LayoutSpec extends SparkSpec {
       at = java.time.Instant.ofEpochSecond(1000000100L))
 
     // published as the new latest run; staging is gone; old run untouched
-    assert(TimeTravel.listRuns(outputDir).last === stamp)
-    assert(TimeTravel.listRuns(outputDir).size === 2)
+    assert(TimeTravel.listRuns(outputDir, hadoopConf).last === stamp)
+    assert(TimeTravel.listRuns(outputDir, hadoopConf).size === 2)
     assert(!new java.io.File(outputDir).listFiles().exists(_.getName.startsWith(".staging")))
     val run1After = new java.io.File(s"$run1/job/data").listFiles()
       .map(f => f.getName -> f.length()).sortBy(_._1).toSeq
@@ -120,7 +120,7 @@ class LayoutSpec extends SparkSpec {
     val stamp = Sink.writeAudited(good, outputDir, "job",
       Seq(Validation.completeness("v"), Validation.uniqueness(Seq("id"))),
       at = java.time.Instant.ofEpochSecond(1000000000L))
-    assert(TimeTravel.listRuns(outputDir) === Seq(stamp))
+    assert(TimeTravel.listRuns(outputDir, hadoopConf) === Seq(stamp))
     assert(TimeTravel.readLatest(spark, outputDir, "job").count() === 2L)
 
     // bad batch: duplicate ids → uniqueness fails → publish refused,
@@ -132,7 +132,7 @@ class LayoutSpec extends SparkSpec {
         at = java.time.Instant.ofEpochSecond(1000000100L))
     }
     assert(e.getMessage.contains("uniqueness_id"))
-    assert(TimeTravel.listRuns(outputDir) === Seq(stamp)) // nothing published
+    assert(TimeTravel.listRuns(outputDir, hadoopConf) === Seq(stamp)) // nothing published
     assert(new java.io.File(outputDir).listFiles()
       .exists(_.getName.startsWith(".staging")), "quarantine must remain")
     assert(TimeTravel.readLatest(spark, outputDir, "job").count() === 2L)
@@ -145,7 +145,8 @@ class LayoutSpec extends SparkSpec {
     val stamp = Sink.writeAudited(good, s"file:$dir", "job",
       Seq(Validation.uniqueness(Seq("id"))),
       at = java.time.Instant.ofEpochSecond(1000000000L))
-    assert(TimeTravel.listRuns(dir) === Seq(stamp))
+    assert(TimeTravel.listRuns(s"file:$dir", hadoopConf) === Seq(stamp))
+    assert(TimeTravel.readLatest(spark, s"file:$dir", "job").count() === 2L)
     assert(!new java.io.File(dir).list().exists(_.startsWith(".staging")))
     assert(spark.read.parquet(s"file:$dir/$stamp/job/data").count() === 2L)
     val e = intercept[IllegalArgumentException] {
@@ -153,6 +154,18 @@ class LayoutSpec extends SparkSpec {
         at = java.time.Instant.ofEpochSecond(1000000000L))
     }
     assert(e.getMessage.contains("immutable"))
+  }
+
+  test("vacuum on a file: URI output dir deletes the old runs at that path") {
+    val dir = Files.createTempDirectory("graft_vacuum_uri").toString
+    val ats = Seq(1000000000L, 1000000100L, 1000000200L).map(java.time.Instant.ofEpochSecond)
+    ats.foreach(at => Seq((1L, "a")).toDF("id", "v").write
+      .parquet(s"${Sink.runRoot(dir, at)}/job/data"))
+    val runs = TimeTravel.listRuns(dir, hadoopConf)
+    assert(runs.size === 3)
+    assert(TimeTravel.vacuum(s"file:$dir", keep = 1, hadoopConf) === runs.dropRight(1))
+    assert(new java.io.File(dir).list().sorted.toSeq === Seq(runs.last))
+    assert(TimeTravel.listRuns(s"file:$dir", hadoopConf) === Seq(runs.last))
   }
 
   test("key erasure rewrites only affected partitions and removes emptied ones") {

@@ -72,7 +72,7 @@ class StoredIndexSpec extends SparkSpec {
     Clustering.ivfPqWriteIndex(Clustering.ivfPqIndex(emb), s"$r1/ivfpq")
     Clustering.ivfPqWriteIndex(
       Clustering.ivfPqIndex(emb.filter(col("vec_id") % 2 === 0)), s"$r2/ivfpq")
-    val runs = graft.etl.TimeTravel.listRuns(base)
+    val runs = graft.etl.TimeTravel.listRuns(base, hadoopConf)
     assert(runs.size === 2)
     val latest = s"$base/${runs.last}/ivfpq"
     val older = s"$base/${runs.head}/ivfpq"
@@ -196,7 +196,7 @@ class StoredIndexSpec extends SparkSpec {
     val before = recallOf(run1)
     val run2 = Clustering.optimizeIndex(full, root, at = t0.plusSeconds(60))
     val after = recallOf(run2)
-    assert(Clustering.latestIndexRun(root) === run2)
+    assert(Clustering.latestIndexRun(spark, root) === run2)
     info(f"recall@5 on shifted queries: drifted=$before%.3f retrained=$after%.3f")
     assert(after > before,
       s"retrain must restore recall: before=$before after=$after")
@@ -274,5 +274,25 @@ class StoredIndexSpec extends SparkSpec {
     val sl = sliced.select(col("q_id"), col("vec_id"), col("score"))
     assert(sl.count() > 0)
     assert(sl.except(rr).isEmpty && rr.except(sl).isEmpty)
+  }
+
+  test("a hot cell larger than AQE's advisory size splits across files; every vec_id kept") {
+    // One cell holds every code row. The split needs several map outputs,
+    // so the codes come in 8 splits.
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_hot").toString
+    val codes = spark.range(0, 40000, 1, 8)
+      .select(col("id").as("vec_id"), lit(7L).as("cell"), array(col("id") % 256).as("code"))
+    val side = spark.range(1).select(lit(7L).as("cell"))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try Clustering.ivfPqWriteIndex(Clustering.IvfPqIndex(codes, side, side), dir)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val files = new java.io.File(s"$dir/codes/cell=7").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(files >= 2, s"hot cell must split across files, got $files")
+    val stored = spark.read.parquet(s"$dir/codes")
+    assert(stored.count() === 40000L)
+    assert(stored.select("vec_id").distinct().count() === 40000L)
   }
 }

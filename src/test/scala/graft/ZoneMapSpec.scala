@@ -199,17 +199,17 @@ class ZoneMapSpec extends SparkSpec {
     instants.zipWithIndex.foreach { case (at, i) =>
       Sink.writeData(li.limit(100 * (i + 1)), Sink.runRoot(root, at), "job")
     }
-    val runs = TimeTravel.listRuns(root)
+    val runs = TimeTravel.listRuns(root, hadoopConf)
     assert(runs.size === 3 && runs === runs.sorted)
     // Old versions are immutable path selections: each run keeps its count.
     assert(TimeTravel.readRun(spark, root, runs.head, "job").count() === 100)
     assert(TimeTravel.readLatest(spark, root, "job").count() === 300)
     // Vacuum keep-2: oldest run deleted, survivors unchanged.
-    val deleted = TimeTravel.vacuum(root, keep = 2)
+    val deleted = TimeTravel.vacuum(root, keep = 2, hadoopConf)
     assert(deleted === Seq(runs.head))
-    assert(TimeTravel.listRuns(root) === runs.drop(1))
+    assert(TimeTravel.listRuns(root, hadoopConf) === runs.drop(1))
     assert(TimeTravel.readLatest(spark, root, "job").count() === 300)
-    intercept[IllegalArgumentException](TimeTravel.vacuum(root, keep = 0))
+    intercept[IllegalArgumentException](TimeTravel.vacuum(root, keep = 0, hadoopConf))
   }
 
   test("stale manifest (file added after build) fails loudly instead of dropping rows") {
