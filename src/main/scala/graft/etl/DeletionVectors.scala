@@ -76,8 +76,9 @@ object DeletionVectors {
   }
 
   private def tombstones(spark: SparkSession, dvDir: String): DataFrame = {
-    val d = new java.io.File(dvDir)
-    if (!d.isDirectory)
+    val d = new org.apache.hadoop.fs.Path(dvDir)
+    val fs = d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(d) || !fs.getFileStatus(d).isDirectory)
       spark.range(0).select(lit("").as("file"), lit(0L).as("pos")).limit(0)
     else spark.read.parquet(dvDir).select(col("file"), col("pos")).distinct()
   }
@@ -199,26 +200,21 @@ object DeletionVectors {
     * ([[graft.operators.Clustering.optimizeIndex]]).
     *
     * Hive partition columns survive via [[Sink.writeData]]'s partitioning
-    * contract (upgrade/state/county when present in the schema). Returns
-    * the published run's data dir. */
+    * contract (upgrade/state/county when present in the schema). The run
+    * publishes through [[Sink.publishRun]]; `tableRoot` and `dvDir` may be
+    * local paths or any Hadoop file system URI. Returns the published
+    * run's data dir. */
   def applyDeletesAsRun(spark: SparkSession, dataDir: String, dvDir: String,
       tableRoot: String, jobName: String = "table",
       at: java.time.Instant = java.time.Instant.now()): String = {
-    val rootFile = new java.io.File(tableRoot)
-    rootFile.mkdirs()
+    val conf = spark.sparkContext.hadoopConfiguration
     // Crash hygiene: a fold that died before its rename left one hidden
     // staging dir — sweep leftovers before staging anew (store doctrine).
-    Option(rootFile.listFiles()).foreach(_.filter(_.getName.startsWith(".staging-"))
-      .foreach(Compaction.deleteDir))
-    val runDir = Sink.runRoot(tableRoot, at)
-    val stamp = runDir.substring(runDir.lastIndexOf('/') + 1)
-    require(!new java.io.File(runDir).exists(),
-      s"applyDeletesAsRun stamp collision: $runDir already exists")
-    val staging = new java.io.File(rootFile, s".staging-$stamp")
-    Sink.writeData(readWithDeletes(spark, dataDir, dvDir), staging.toString, jobName)
-    require(staging.renameTo(new java.io.File(runDir)),
-      s"applyDeletesAsRun: publish rename failed for $runDir")
-    Compaction.deleteDir(new java.io.File(dvDir))
-    s"$runDir/$jobName/data"
+    val stamp = Sink.publishRun(tableRoot, at, conf, sweep = true) { (staging, _) =>
+      Sink.writeData(readWithDeletes(spark, dataDir, dvDir), staging, jobName)
+    }
+    val dv = new org.apache.hadoop.fs.Path(dvDir)
+    dv.getFileSystem(conf).delete(dv, true)
+    s"$tableRoot/$stamp/$jobName/data"
   }
 }

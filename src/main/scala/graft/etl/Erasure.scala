@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Key erasure over a partitioned table — the right-to-be-forgotten /
   * takedown operation: delete every row carrying one of the given keys by
@@ -34,6 +35,49 @@ object Erasure {
     * GDPR batch as literals is a 10⁶-node expression tree — analyzer
     * cost and plan-size hazards long before memory (r11 verdict #5). */
   val LiteralKeyMax = 10000
+
+  /** An erase request's keys, null-free and distinct, in the
+    * size-adaptive representation of [[LiteralKeyMax]]: literals, or a
+    * pinned one-column frame. A null key is never kept (inside `NOT isin`
+    * it would make every row's keep-test null). */
+  private[graft] final class KeySet private[Erasure] (
+      literals: Array[Any], frame: Option[DataFrame]) {
+    def isEmpty: Boolean = frame.isEmpty && literals.isEmpty
+
+    def fold[T](onLiterals: Array[Any] => T, onFrame: DataFrame => T): T =
+      frame.fold(onLiterals(literals))(onFrame)
+
+    /** Rows of `df` whose `keyCol` is a key. */
+    def matching(df: DataFrame, keyCol: String): DataFrame = fold(
+      l => df.filter(col(keyCol).isin(l: _*)),
+      kf => df.join(kf, df(keyCol) === kf(KeyCol), "left_semi"))
+
+    /** Rows of `df` whose `keyCol` is not a key; a null-keyed row survives
+      * under either representation. */
+    def surviving(df: DataFrame, keyCol: String): DataFrame = fold(
+      l => df.filter(coalesce(!col(keyCol).isin(l: _*), lit(true))),
+      kf => df.join(kf, df(keyCol) === kf(KeyCol), "left_anti"))
+  }
+
+  private val KeyCol = "__erase_key"
+
+  /** Run `body` on the keys of `keys`' first column cast to `keyType`. The
+    * representation is chosen by a bounded `limit(LiteralKeyMax + 1)`
+    * probe, never a full collect; a frame key set is pinned once (the
+    * per-batch probes must not recompute the request's lineage) and
+    * released when `body` returns. */
+  private[graft] def withKeySet[T](keys: DataFrame, keyType: DataType)(
+      body: KeySet => T): T = {
+    val norm = keys.select(col(keys.columns.head).cast(keyType).as(KeyCol))
+      .filter(col(KeyCol).isNotNull).distinct()
+    val probe = norm.limit(LiteralKeyMax + 1).collect().map(_.get(0))
+    val frame =
+      if (probe.length <= LiteralKeyMax) None else Some(norm.localCheckpoint(true))
+    try body(new KeySet(probe, frame))
+    finally frame.foreach( // SCALING #38's leak class: one orphaned
+      // checkpoint RDD per drained request
+      org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint)
+  }
 
   def eraseKeys(spark: SparkSession, dataDir: String, partCols: Seq[String],
       keyCol: String, keys: DataFrame): (Long, Long, Long) = {
@@ -154,15 +198,13 @@ object Erasure {
     * ones stay a frame and tombstone through a semi-join
     * ([[DeletionVectors.addDeleteKeys]]). */
   def softEraseKeys(spark: SparkSession, dataDir: String, dvDir: String,
-      keyCol: String, keys: DataFrame): Long = {
-    val kd = keys.select(col(keyCol)).filter(col(keyCol).isNotNull).distinct()
-    val probe = kd.limit(LiteralKeyMax + 1).collect().map(_.get(0))
-    if (probe.isEmpty) return 0L
-    if (probe.length <= LiteralKeyMax)
-      DeletionVectors.addDeletes(spark, dataDir, dvDir,
-        col(keyCol).isin(probe: _*))
-    else DeletionVectors.addDeleteKeys(spark, dataDir, dvDir, keyCol, kd)
-  }
+      keyCol: String, keys: DataFrame): Long =
+    withKeySet(keys.select(col(keyCol)), keys.schema(keyCol).dataType) { ks =>
+      if (ks.isEmpty) 0L
+      else ks.fold(
+        l => DeletionVectors.addDeletes(spark, dataDir, dvDir, col(keyCol).isin(l: _*)),
+        kf => DeletionVectors.addDeleteKeys(spark, dataDir, dvDir, keyCol, kf))
+    }
 
   /** The fully general composed erasure: each signature store carries its
     * OWN key column as `(path, storeKeyCol)` — `doc_id` for the

@@ -98,15 +98,13 @@ object Layout {
     * files ([[Compaction]]'s sizing), rebuild the [[ZoneMaps]] manifest
     * for both columns, and publish the result as a NEW stamped run.
     *
-    * Publish protocol: everything is written under a hidden
-    * `.staging-<stamp>` dir and renamed to `<stamp>` at the end — readers
-    * resolving "latest" through [[TimeTravel.listRuns]] (which only
-    * matches final stamp names) either see the old run or the complete
-    * new one, never a half-written directory; a crashed optimize leaves
-    * only an inert staging dir. The old run is untouched (immutable-once-
-    * written, same contract as the stored ANN index) — reclaiming it is
-    * [[TimeTravel.vacuum]]'s job, under its retention policy, not
-    * optimize's. Returns the new run stamp.
+    * Publish protocol: [[Sink.publishRun]] — readers resolving "latest"
+    * either see the old run or the complete new one, never a half-written
+    * directory; a crashed optimize leaves only an inert staging dir. The
+    * old run is untouched (immutable-once-written, same contract as the
+    * stored ANN index) — reclaiming it is [[TimeTravel.vacuum]]'s job,
+    * under its retention policy, not optimize's. `outputDir` may be a
+    * local path or any Hadoop file system URI. Returns the new run stamp.
     *
     * At 100 TB this is the periodic job that turns an append-heavy
     * ingest's small scattered files into skip-friendly rectangles: file
@@ -119,36 +117,41 @@ object Layout {
     val runs = TimeTravel.listRuns(outputDir, spark.sparkContext.hadoopConfiguration)
     require(runs.nonEmpty, s"no runs to optimize under $outputDir")
     val srcData = s"$outputDir/${runs.last}/$jobName/data"
-    val bytes = Compaction.dirBytes(srcData)
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val runRoot = Sink.runRoot(outputDir, at)
-    val stamp = runRoot.substring(outputDir.length + 1)
-    require(!runs.contains(stamp),
-      s"optimize target run $stamp already exists — runs are immutable")
-    val staging = new java.io.File(s"$outputDir/.staging-$stamp")
-    val dest = new java.io.File(runRoot)
-    zorderWrite(spark.read.parquet(srcData), colA, colB, nFiles,
-      s"${staging.getPath}/$jobName/data")
-    // The manifest records absolute file paths (input_file_name), but the
-    // data is still under .staging- here and the publish rename will move
-    // it — so build into a scratch dir, rewrite the paths to their FINAL
-    // post-rename location, and land the result as the real manifest, all
-    // before the atomic publish. (A manifest pointing at staging paths
-    // would trip prunedRead's both-direction freshness gate.)
-    val buildDir = s"${staging.getPath}/$jobName/zonemap_build"
-    ZoneMaps.build(spark, s"${staging.getPath}/$jobName/data", buildDir, Seq(colA, colB))
-    spark.read.parquet(buildDir)
-      .withColumn("file",
-        org.apache.spark.sql.functions.expr(
-          s"replace(file, '/.staging-$stamp/', '/$stamp/')"))
-      .coalesce(1)
-      .write.parquet(s"${staging.getPath}/$jobName/zonemap")
-    Compaction.deleteDir(new java.io.File(buildDir))
-    if (!staging.renameTo(dest))
-      throw new java.io.IOException(
-        s"optimize publish failed: could not rename $staging to $dest — " +
-          "the staging dir is inert and safe to delete")
-    stamp
+    val conf = spark.sparkContext.hadoopConfiguration
+    val nFiles = math.max(1, math.ceil(parquetBytes(srcData, conf).toDouble / targetBytes).toInt)
+    Sink.publishRun(outputDir, at, conf) { (staging, stamp) =>
+      zorderWrite(spark.read.parquet(srcData), colA, colB, nFiles,
+        s"$staging/$jobName/data")
+      // The manifest records absolute file paths (input_file_name), but the
+      // data is still under .staging- here and the publish rename will move
+      // it — so build into a scratch dir, rewrite the paths to their FINAL
+      // post-rename location, and land the result as the real manifest, all
+      // before the atomic publish. (A manifest pointing at staging paths
+      // would trip prunedRead's both-direction freshness gate.)
+      val buildDir = s"$staging/$jobName/zonemap_build"
+      ZoneMaps.build(spark, s"$staging/$jobName/data", buildDir, Seq(colA, colB))
+      spark.read.parquet(buildDir)
+        .withColumn("file",
+          org.apache.spark.sql.functions.expr(
+            s"replace(file, '/${new org.apache.hadoop.fs.Path(staging).getName}/', '/$stamp/')"))
+        .coalesce(1)
+        .write.parquet(s"$staging/$jobName/zonemap")
+      val build = new org.apache.hadoop.fs.Path(buildDir)
+      build.getFileSystem(conf).delete(build, true)
+    }
+  }
+
+  /** Bytes of the `.parquet` files under `dir`, by a `listStatus` walk
+    * (`listFiles` forks an `ls` per file on the local file system). */
+  private def parquetBytes(dir: String, conf: org.apache.hadoop.conf.Configuration): Long = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    def walk(p: org.apache.hadoop.fs.Path): Long = fs.listStatus(p).map { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) st.getLen
+      else 0L
+    }.sum
+    if (fs.exists(root)) walk(root) else 0L
   }
 
   def zorderWrite(df: DataFrame, colA: String, colB: String, nFiles: Int, path: String): Unit =

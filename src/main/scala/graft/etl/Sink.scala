@@ -106,33 +106,52 @@ object Sink {
     * quarantined evidence and the call throws, naming the failed checks —
     * readers of `latest` never observe the bad batch.
     *
-    * Same atomic-rename publish contract as [[graft.etl.Layout.optimize]]
-    * (TimeTravel.listRuns only matches final stamp names). `outputDir`
-    * may be a local path or any Hadoop file system URI. Returns the
-    * published run stamp. */
+    * Published through [[publishRun]]. `outputDir` may be a local path or
+    * any Hadoop file system URI. Returns the published run stamp. */
   def writeAudited(df: DataFrame, outputDir: String, jobName: String,
       checks: Seq[graft.operators.Validation.Check],
       refIntegrity: Seq[(String, DataFrame, String)] = Nil,
       at: Instant = Instant.now()): String = {
     val spark = df.sparkSession
-    val runRootPath = runRoot(outputDir, at)
-    val stamp = runRootPath.substring(outputDir.length + 1)
+    publishRun(outputDir, at, spark.sparkContext.hadoopConfiguration) { (staging, _) =>
+      df.write.mode("overwrite").option("compression", "snappy")
+        .parquet(s"$staging/$jobName/data")
+      val verdicts = graft.operators.Validation
+        .suite(spark.read.parquet(s"$staging/$jobName/data"),
+          checks, refIntegrity)
+        .collect() // constraint-count-sized
+      val failed = verdicts.filter(_.getLong(2) == 0L).map(_.getString(0))
+      if (failed.nonEmpty)
+        throw new IllegalStateException(
+          s"write-audit-publish REFUSED for $jobName: failed checks " +
+            failed.mkString("[", ", ", "]") +
+            s" — quarantined batch left at $staging for inspection")
+    }
+  }
+
+  /** Publish a new run under `outputDir` (a local path or any Hadoop file
+    * system URI), the one run-stamp publish of [[writeAudited]],
+    * [[Layout.optimize]] and [[DeletionVectors.applyDeletesAsRun]]:
+    * `write(staging, stamp)` fills the hidden `.staging-<stamp>` root it
+    * is given, then one rename makes it the run `<stamp>`
+    * ([[TimeTravel.listRuns]] lists only final stamps, so readers see the
+    * old runs or the complete new one). Refuses a stamp that already
+    * exists. With `sweep`, leftover staging dirs of crashed publishes are
+    * deleted first; without it nothing else under `outputDir` is touched,
+    * so a refused [[writeAudited]] batch stays quarantined. Returns the
+    * stamp. */
+  private[etl] def publishRun(outputDir: String, at: Instant, conf: Configuration,
+      sweep: Boolean = false)(write: (String, String) => Unit): String = {
+    val root = runRoot(outputDir, at)
+    val stamp = root.substring(outputDir.length + 1)
     val staging = new Path(s"$outputDir/.staging-$stamp")
-    val dest = new Path(runRootPath)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dest = new Path(root)
+    val fs = dest.getFileSystem(conf)
     require(!fs.exists(dest), s"run $stamp already exists — runs are immutable")
-    df.write.mode("overwrite").option("compression", "snappy")
-      .parquet(s"$staging/$jobName/data")
-    val verdicts = graft.operators.Validation
-      .suite(spark.read.parquet(s"$staging/$jobName/data"),
-        checks, refIntegrity)
-      .collect() // constraint-count-sized
-    val failed = verdicts.filter(_.getLong(2) == 0L).map(_.getString(0))
-    if (failed.nonEmpty)
-      throw new IllegalStateException(
-        s"write-audit-publish REFUSED for $jobName: failed checks " +
-          failed.mkString("[", ", ", "]") +
-          s" — quarantined batch left at $staging for inspection")
+    if (sweep && fs.exists(staging.getParent))
+      fs.listStatus(staging.getParent).filter(_.getPath.getName.startsWith(".staging-"))
+        .foreach(st => fs.delete(st.getPath, true))
+    write(staging.toString, stamp)
     if (!fs.rename(staging, dest))
       throw new java.io.IOException(
         s"publish failed: could not rename $staging to $dest")

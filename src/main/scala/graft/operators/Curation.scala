@@ -268,10 +268,10 @@ object Curation {
 
   /** Score a crawl batch's novelty against the INCREMENTAL gram store and
     * fold its new grams in — [[noveltyAgainstStore]]'s write-once store
-    * given the signature-store lifecycle (the t42 gap): writer lease,
-    * staged `batch-*` publish by ONE atomic rename, content-anti-joined
-    * idempotent re-ingest, format marker gating, read errors propagating
-    * (only true path absence means "empty store"). The reference corpus
+    * given the signature-store lifecycle (the t42 gap): the store is a
+    * [[graft.etl.BatchStore]] (lease, staged publish, crash recovery,
+    * format marker pinning the n-gram order and Bloom parameters),
+    * re-ingest is content-anti-joined (idempotent). The reference corpus
     * GROWS per accepted crawl; per-crawl cost tracks the BATCH (its grams
     * are Bloom-prefiltered against the root sketch, and the exact
     * registry join touches only the maybe-slice).
@@ -285,10 +285,11 @@ object Curation {
     * default new-only mode scores against the snapshot as-is.
     *
     * Bloom maintenance is crash-ordered for correctness, not freshness:
-    * the merged sketch is swapped in BEFORE the batch rename
+    * the merged sketch is a sidecar swapped in BEFORE the batch rename
     * (over-coverage is harmless — the exact join decides; under-coverage
-    * would be silent false negatives), and a missing/interrupted sketch
-    * degrades to exact-join-everything, never to wrong output.
+    * would be silent false negatives). A missing sketch degrades to
+    * exact-join-everything, never to wrong output, and the next publish
+    * rebuilds it over the whole store, not over its own batch alone.
     *
     * Output (localCheckpointed BEFORE the append — the store write would
     * invalidate path-dependent caches): (doc_id, n_grams, n_novel,
@@ -307,82 +308,30 @@ object Curation {
       estimatedGrams: Long = 1L << 20, numBits: Long = 1L << 23,
       replayDeterministic: Boolean = false): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.ColumnBridge
     import org.apache.spark.sql.types._
     val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.WriterLease.withLock(fs, dir, "novelty gram store") {
-      val hasStore = fs.exists(dir) &&
-        fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch-"))
-      val marker = new org.apache.hadoop.fs.Path(
-        dir, incrMarkerName(n, estimatedGrams, numBits))
-      if (hasStore && !fs.exists(marker))
-        throw new IllegalStateException(
-          s"incremental gram store at $storeDir was written with different " +
-            s"n-gram/Bloom parameters (missing ${marker.getName}) — grams " +
-            "hashed differently would silently match nothing; rebuild")
-      // A batch-less dir may still carry STALE markers (crash between
-      // marker create and first batch publish, or an erase that retired
-      // the last batch): drop them before (re)creating ours, or a later
-      // ingest with either parameter set would pass the gate against
-      // mixed-parameter content and eraseFromGramStore would rebuild its
-      // sketch from an arbitrary surviving marker (advice finding r11).
-      // A stale `_bloom.bin` goes with them: the sketch is swapped BEFORE
-      // the batch rename, so a crash in that window leaves a sketch
-      // describing content that never published — harmless over-coverage
-      // under the SAME Bloom params, but a hard mergeInPlace
-      // IncompatibleMergeException under DIFFERENT ones (the exact dir
-      // the marker sweep was added to heal). A batch-less store's sketch
-      // is definitionally rebuildable from nothing; drop it.
-      if (!hasStore && fs.exists(dir)) {
-        fs.listStatus(dir).iterator
-          .filter(st => st.getPath.getName.startsWith("_format-ngram") &&
-            st.getPath.getName != marker.getName)
-          .foreach(st => fs.delete(st.getPath, false))
-        val staleBloom = new org.apache.hadoop.fs.Path(dir, "_bloom.bin")
-        if (fs.exists(staleBloom)) fs.delete(staleBloom, false)
-      }
-      // staging leftovers are always pre-publish garbage inside the lease
-      if (fs.exists(dir)) fs.listStatus(dir).iterator
-        .filter(_.getPath.getName.startsWith(".staging-"))
-        .foreach(s => fs.delete(s.getPath, true))
+    graft.etl.BatchStore.open(spark, storeDir, GramStore,
+      incrMarkerName(n, estimatedGrams, numBits), "grams hashed with other " +
+        "n-gram/Bloom parameters would silently match nothing") { store =>
       val docGrams = batch.select(col("doc_id"), explode(
           graft.functions.GraftColumns.shingleHashes(col("text"), n)).as("h"))
         .localCheckpoint(true) // 3 consumers + must survive the append
-      val storeGrams =
-        if (hasStore)
-          spark.read.option("recursiveFileLookup", "true").parquet(storeDir)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("h", LongType),
-            StructField("src_id", StringType))))
+      val storeGrams = store.snapshot(StructType(Seq(
+        StructField("h", LongType), StructField("src_id", StringType))))
       val reference =
         if (!replayDeterministic) storeGrams
         else storeGrams.join(
           batch.select(col("doc_id").cast("string").as("src_id")).distinct(),
           Seq("src_id"), "left_anti")
-      // '_'-prefixed so the recursiveFileLookup parquet read of batch-*
-      // dirs never tries to parse the sketch as parquet
-      val bloomPath = new org.apache.hadoop.fs.Path(dir, "_bloom.bin")
-      val sketch =
-        if (fs.exists(bloomPath)) {
-          val len = fs.getFileStatus(bloomPath).getLen.toInt
-          val buf = new Array[Byte](len)
-          val in = fs.open(bloomPath)
-          try in.readFully(0L, buf) finally in.close()
-          buf
-        } else Array.empty[Byte]
       // ABSENT sketch = no prefilter (exact join over everything — slower,
       // never wrong); contrast writeDecontamStore, where empty means an
       // empty store.
-      val maybe =
-        if (sketch.isEmpty) docGrams
-        else docGrams.filter(ColumnBridge.column(
-          new BloomFilterMightContain(
-            Literal.create(sketch, BinaryType),
-            ColumnBridge.expression(col("h")))))
+      val sketch = store.readSidecar(BloomFile)
+      val maybe = sketch.fold(docGrams)(bytes => docGrams.filter(ColumnBridge.column(
+        new BloomFilterMightContain(
+          Literal.create(bytes, BinaryType),
+          ColumnBridge.expression(col("h"))))))
       val seen = maybe.join(reference.select(col("h")), Seq("h"), "left_semi")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("__n_seen"))
       val scores = docGrams.groupBy(col("doc_id"))
@@ -394,190 +343,95 @@ object Curation {
         .localCheckpoint(true)
       // fold in: new grams only (anti-join vs the FULL snapshot — a
       // re-ingested batch adds nothing, the idempotence contract)
-      // Count rides the checkpoint materialization via observe() — no
-      // separate count job at publish (the Dedup.checkpointCounted pattern).
-      val newObs = org.apache.spark.sql.Observation()
-      val newGrams = docGrams
+      val (newGrams, nNew) = graft.etl.BatchStore.checkpointCounted(docGrams
         .groupBy(col("h"))
         .agg(min(col("doc_id").cast("string")).as("src_id"))
-        .join(storeGrams.select(col("h")), Seq("h"), "left_anti")
-        .observe(newObs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val nNew = newObs.get.get("n") match {
-        case Some(v: Long) => v
-        case _ => 0L
-      }
-      if (nNew > 0L) {
-        val id = java.util.UUID.randomUUID().toString
-        val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$id")
-        val published = new org.apache.hadoop.fs.Path(dir, s"batch-$id")
-        graft.etl.BatchFiles.sizedByCount(newGrams, nNew)
-          .write.parquet(staging.toString)
-        // merged sketch BEFORE the batch rename (see scaladoc)
-        val newSketch = newGrams.agg(ColumnBridge.column(
-            new BloomFilterAggregate(
-              ColumnBridge.expression(col("h")),
-              ColumnBridge.expression(lit(estimatedGrams)),
-              ColumnBridge.expression(lit(numBits))).toAggregateExpression())
-            .as("bf")).head().getAs[Array[Byte]](0)
-        val mergedBytes =
-          if (sketch.isEmpty) newSketch
-          else {
+        .join(storeGrams.select(col("h")), Seq("h"), "left_anti"))
+      // merged sketch BEFORE the batch rename (see scaladoc); a store that
+      // lost its sketch gets one over all of its grams
+      store.publish(newGrams, nNew, () => store.writeSidecar(BloomFile,
+        (sketch, store.hasBatches) match {
+          case (Some(old), _) =>
             val merged = org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(sketch))
-            merged.mergeInPlace(org.apache.spark.util.sketch.BloomFilter
-              .readFrom(new java.io.ByteArrayInputStream(newSketch)))
+              new java.io.ByteArrayInputStream(old))
+            merged.mergeInPlace(org.apache.spark.util.sketch.BloomFilter.readFrom(
+              new java.io.ByteArrayInputStream(bloomOf(newGrams, estimatedGrams, numBits))))
             val bos = new java.io.ByteArrayOutputStream()
             merged.writeTo(bos)
             bos.toByteArray
-          }
-        val bloomStaging = new org.apache.hadoop.fs.Path(dir, s".staging-bloom-$id")
-        val out = fs.create(bloomStaging, true)
-        try out.write(mergedBytes) finally out.close()
-        fs.delete(bloomPath, false)
-        if (!fs.rename(bloomStaging, bloomPath))
-          throw new IllegalStateException(
-            s"failed to swap gram-store sketch at $bloomPath")
-        if (!fs.exists(marker)) fs.create(marker, true).close()
-        if (!fs.rename(staging, published))
-          throw new IllegalStateException(
-            s"failed to publish gram batch $staging -> $published")
-      }
+          case (None, true) =>
+            bloomOf(storeGrams.select(col("h")).union(newGrams.select(col("h"))),
+              estimatedGrams, numBits)
+          case (None, false) => bloomOf(newGrams, estimatedGrams, numBits)
+        }))
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(docGrams)
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(newGrams)
       scores
     }
   }
 
+  private val GramStore = "novelty gram store"
+  /** The gram store's Bloom sketch over every stored `h`. '_'-prefixed so
+    * the recursiveFileLookup parquet read of the batches never parses it. */
+  private val BloomFile = "_bloom.bin"
+
+  /** The serialized Bloom filter of `grams`' `h` column. */
+  private def bloomOf(grams: DataFrame, estimatedGrams: Long, numBits: Long): Array[Byte] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    grams.agg(ColumnBridge.column(new BloomFilterAggregate(
+        ColumnBridge.expression(col("h")),
+        ColumnBridge.expression(lit(estimatedGrams)),
+        ColumnBridge.expression(lit(numBits))).toAggregateExpression())
+      .as("bf")).head().getAs[Array[Byte]](0)
+  }
+
   /** Right-to-be-forgotten over the INCREMENTAL gram store — the erasure
     * obligation extends to derived n-gram hashes exactly as it does to
-    * MinHash signatures ([[graft.operators.Dedup.eraseFromStore]], whose
-    * erase-first rename bias this mirrors): deleting a document from the
-    * lake while its gram hashes stay in the store means future crawls are
-    * still scored against erased content. Erasure is CONSERVATIVE by
-    * construction: a gram is stored once under its FIRST contributor's
-    * src_id, so dropping rows with src_id ∈ keys may also forget grams
-    * that retained documents share — those score "novel" again on their
-    * next sighting (a score shift, never retained erased-derived data).
+    * MinHash signatures ([[graft.operators.Dedup.eraseFromStore]]): both
+    * go through [[graft.etl.BatchStore.erase]] (erase-first, clean
+    * batches byte-identical, size-adaptive key set). Deleting a document
+    * from the lake while its gram hashes stay in the store means future
+    * crawls are still scored against erased content. Erasure is
+    * CONSERVATIVE by construction: a gram is stored once under its FIRST
+    * contributor's src_id, so dropping rows with src_id ∈ keys may also
+    * forget grams that retained documents share — those score "novel"
+    * again on their next sighting (a score shift, never retained
+    * erased-derived data).
     *
     * The root `_bloom.bin` accelerator is REBUILT from the survivors
     * whenever keys were offered (not only when rows died — so an
     * interrupted erase completes on re-run): erased hashes must not
-    * survive in the sketch either, and the swap is staged + renamed with
-    * the same crash posture as ingest (a missing sketch degrades to
-    * exact-join-everything, never to wrong output). Bloom creation
-    * parameters are recovered from the format marker's name. Runs under
-    * the same writer lease as ingest. Returns gram rows erased. */
+    * survive in the sketch either. Bloom creation parameters are
+    * recovered from the format marker's name; a store erased empty drops
+    * marker and sketch with its last batch. Returns gram rows erased. */
   def eraseFromGramStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String, keys: DataFrame): Long = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // nulls are DROPPED from the key set, never passed to isin: a null
-    // literal inside !isin(...) evaluates to NULL for every non-matching
-    // row, the keep-filter would drop them all, and one null in an erase
-    // request would silently wipe every batch it touches (review finding).
-    val keyIds = keys.select(col(keys.columns.head).cast("string"))
-      .filter(col(keys.columns.head).isNotNull)
-      .distinct().collect().map(_.getString(0))
-    val dir = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir) || keyIds.isEmpty) return 0L
-    graft.etl.WriterLease.withLock(fs, dir, "novelty gram store") {
-      val markerRe = "_format-ngram(\\d+)-e(\\d+)-b(\\d+)-incr-v1".r
-      val markers = fs.listStatus(dir).map(_.getPath.getName)
-        .collect { case m @ markerRe(_, _, _) => m }.sorted
-      // multiple markers = a corrupted parameter history (the ingest-side
-      // stale-marker sweep should make this unreachable) — an arbitrary
-      // pick could rebuild the sketch with the WRONG hash parameters, a
-      // silent-false-negative generator; fail loudly instead.
-      if (markers.length > 1)
-        throw new IllegalStateException(
-          s"gram store at $storeDir carries ${markers.length} format " +
-            s"markers (${markers.mkString(", ")}) — parameter history " +
-            "corrupted; rebuild the store")
-      val params = markers.headOption
-        .map { case markerRe(_, e, b) => (e.toLong, b.toLong) }
-        .getOrElse(throw new IllegalStateException(
-          s"gram store at $storeDir has no incremental format marker — " +
-            "cannot recover Bloom parameters; nothing erased"))
-      // Sweep BOTH leftover classes inside the lease: .staging-* is
-      // always pre-publish garbage, and .retired-* is a crash window of a
-      // PREVIOUS erase (retire-rename done, delete not) — the original
-      // batch, erased rows included, whose survivors were already
-      // republished; deleting it completes that erase (the obligation) at
-      // worst at the cost of conservative forgetting if the crash was
-      // instead between stage and republish (forgotten grams score novel
-      // again — a score shift, never retained erased data).
-      fs.listStatus(dir).iterator
-        .filter(st => st.getPath.getName.startsWith(".staging-") ||
-          st.getPath.getName.startsWith(".retired-"))
-        .foreach(st => fs.delete(st.getPath, true))
-      def liveBatches() = fs.listStatus(dir)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
-      var erased = 0L
-      liveBatches().foreach { b =>
-        val batch = spark.read.parquet(b.getPath.toString)
-        val hits = batch.filter(col("src_id").isin(keyIds: _*)).count()
-        if (hits > 0L) {
-          erased += hits
-          val keep = batch.filter(!col("src_id").isin(keyIds: _*))
-          val keepCount = keep.count()
-          val id = java.util.UUID.randomUUID().toString
-          val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$id")
-          val retired = new org.apache.hadoop.fs.Path(dir, s".retired-$id")
-          // stage first (no window), skip replacement when nothing survives
-          if (keepCount > 0L)
-            graft.etl.BatchFiles.sizedByCount(keep, keepCount)
-              .write.parquet(staging.toString)
-          if (!fs.rename(b.getPath, retired))
-            throw new IllegalStateException(
-              s"eraseFromGramStore: failed to retire ${b.getPath}")
-          if (keepCount > 0L && !fs.rename(staging,
-              new org.apache.hadoop.fs.Path(dir, s"batch-$id")))
-            throw new IllegalStateException(
-              s"eraseFromGramStore: retired ${b.getPath} but failed to " +
-                s"publish $staging — surviving grams are in $retired; " +
-                "re-publish manually or re-ingest the affected crawls")
-          fs.delete(retired, true)
-          if (fs.exists(retired))
-            throw new IllegalStateException(
-              s"eraseFromGramStore: failed to delete $retired — erased " +
-                "gram hashes would survive on disk")
-        }
-      }
-      // sketch rebuild from SURVIVORS — always when keys were offered, so
-      // a crash between the batch rewrites and this swap heals on re-run
-      val bloomPath = new org.apache.hadoop.fs.Path(dir, "_bloom.bin")
-      val survivors = liveBatches()
-      if (survivors.isEmpty) {
-        fs.delete(bloomPath, false)
-        // drop the marker with the last batch: a batch-less store must
-        // read as NO store, not as a parameter claim about nothing — the
-        // next ingest re-declares its own parameters from scratch
-        // (advice finding r11)
-        markers.foreach(m =>
-          fs.delete(new org.apache.hadoop.fs.Path(dir, m), false))
-        ()
-      } else {
-        val sketch = spark.read
-          .parquet(survivors.map(_.getPath.toString).toIndexedSeq: _*)
-          .agg(ColumnBridge.column(new BloomFilterAggregate(
-            ColumnBridge.expression(col("h")),
-            ColumnBridge.expression(lit(params._1)),
-            ColumnBridge.expression(lit(params._2))).toAggregateExpression())
-            .as("bf")).head().getAs[Array[Byte]](0)
-        val staging = new org.apache.hadoop.fs.Path(
-          dir, s".staging-bloom-erase-${java.util.UUID.randomUUID()}")
-        val out = fs.create(staging, true)
-        try out.write(sketch) finally out.close()
-        fs.delete(bloomPath, false)
-        if (!fs.rename(staging, bloomPath))
+      storeDir: String, keys: DataFrame): Long =
+    graft.etl.BatchStore.existing(spark, storeDir, GramStore) { store =>
+      if (!store.hasBatches) 0L
+      else {
+        val markerRe = "_format-ngram(\\d+)-e(\\d+)-b(\\d+)-incr-v1".r
+        val markers = store.markers.collect { case m @ markerRe(_, _, _) => m }
+        // multiple markers = a corrupted parameter history (a batch-less
+        // store drops its markers, so this should be unreachable) — an
+        // arbitrary pick could rebuild the sketch with the WRONG hash
+        // parameters, a silent-false-negative generator; fail loudly instead.
+        if (markers.length > 1)
           throw new IllegalStateException(
-            s"eraseFromGramStore: failed to swap rebuilt sketch at $bloomPath")
+            s"gram store at $storeDir carries ${markers.length} format " +
+              s"markers (${markers.mkString(", ")}) — parameter history " +
+              "corrupted; rebuild the store")
+        val (estimatedGrams, numBits) = markers.headOption
+          .map { case markerRe(_, e, b) => (e.toLong, b.toLong) }
+          .getOrElse(throw new IllegalStateException(
+            s"gram store at $storeDir has no incremental format marker — " +
+              "cannot recover Bloom parameters; nothing erased"))
+        store.erase(keys, "src_id", () => store.writeSidecar(BloomFile,
+          bloomOf(spark.read.parquet(store.batches.map(_.toString): _*),
+            estimatedGrams, numBits)))
+
       }
-      erased
-    }
-  }
+    }.getOrElse(0L)
 
   /** Spark's Bloom FP model: `BloomFilterImpl` picks
     * k = max(1, round(m/n_est·ln 2)) hash functions from the CREATION-time

@@ -297,88 +297,10 @@ object Dedup {
     * `trimSpaces`). Bump whenever shingle/minhash semantics change — stored
     * signatures from an older tokenizer are not comparable to new ones. */
   val StoreFormatMarker = "_format-v2"
-  /** Writer-lease file name (see [[incrementalMinhashPairs]]). Leading '_'
-    * keeps it out of both the store listing and Spark's parquet index. */
-  val StoreLockFile = "_lock"
+  /** The vector store's pinned centering basis (see
+    * [[incrementalSemanticPairs]]). */
+  private val CenterFile = "_center"
   val BandR = 2     // rows per band → 16 bands
-
-  /** Exclusive writer lease over the signature store: atomically create
-    * `_lock` (create-with-overwrite=false — atomic on HDFS and the local
-    * FS), run `body`, delete the lock. A second writer arriving while the
-    * lock is held FAILS LOUDLY with the holder's identity instead of
-    * proceeding: two concurrent writers would each snapshot a store that
-    * excludes the other's batch, both would publish, and the cross-pairs
-    * between their batches would silently never be emitted — an
-    * unreparable gap, because re-ingest is anti-joined to be idempotent.
-    * Serialization is sufficient (not just detection) because the lease
-    * brackets the WHOLE snapshot→pair→publish window: a writer either sees
-    * the lock (throws) or acquires it after the holder's publish rename,
-    * so its snapshot always includes every published batch.
-    *
-    * No auto-expiry: a crashed holder leaves the lock behind and later
-    * writers fail with its identity + acquisition time until an operator
-    * removes the file (a lease timeout that silently broke a slow-but-live
-    * writer's lock would reintroduce the exact lost-pair scenario the lock
-    * exists to prevent). */
-  private def withStoreLock[T](
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path)(body: => T): T =
-    graft.etl.WriterLease.withLock(fs, dir, "signature store")(body)
-
-  /** Shared staged publish for the incremental signature/anchor/vector
-    * stores (must run inside the writer lease): sweep crash-leftover
-    * `.staging-*` dirs first (always pre-publish garbage — the lease
-    * guarantees no live writer is mid-stage; `.retired-*` recovery dirs
-    * are never touched), SKIP the publish entirely when the batch is
-    * empty (an idempotent no-op re-ingest must not grow the store's
-    * batch count — the incrementalPairs rule), else stage the
-    * data-sized batch, run `beforeRename` (metadata that must exist
-    * before any reader can see the batch — the marker-ordering
-    * doctrine), write the format marker, and make the batch visible
-    * with ONE atomic rename. `batch` must be materialized
-    * (checkpointed) by the caller. Returns the rows published. */
-
-  /** Eager localCheckpoint whose ROW COUNT rides the materialization via
-    * observe() (guide §1.4 — no separate count job per ingest publish;
-    * probed in clustersBounded: observe + eager localCheckpoint delivers
-    * the metric). Returns (checkpointed frame, count). */
-  private def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val cp = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    val n = obs.get.get("n") match {
-      case Some(v: Long) => v
-      case _ => 0L
-    }
-    (cp, n)
-  }
-
-  private def publishStoreBatch(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      batch: DataFrame,
-      marker: org.apache.hadoop.fs.Path,
-      what: String,
-      beforeRename: () => Unit = () => (),
-      precount: Long = -1L): Long = {
-    fs.listStatus(dir).iterator
-      .filter(_.getPath.getName.startsWith(".staging-"))
-      .foreach(s => fs.delete(s.getPath, true))
-    // precount ≥ 0 = the caller observed the batch's count on its own
-    // checkpoint materialization; avoid a second count job per publish.
-    val n = if (precount >= 0L) precount else batch.count()
-    if (n > 0L) {
-      val batchId = java.util.UUID.randomUUID().toString
-      val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$batchId")
-      val published = new org.apache.hadoop.fs.Path(dir, s"batch-$batchId")
-      graft.etl.BatchFiles.sizedByCount(batch, n).write.parquet(staging.toString)
-      beforeRename()
-      if (!fs.exists(marker)) fs.create(marker, true).close()
-      if (!fs.rename(staging, published))
-        throw new IllegalStateException(
-          s"failed to publish $what batch $staging -> $published")
-    }
-    n
-  }
 
   /** MinHash signatures: (doc_id, mh array<bigint> of k minima), computed by
     * the single-buffer [[graft.functions.MinHashAgg]] — one shuffled row per
@@ -534,20 +456,11 @@ object Dedup {
     * docs only (semi-join), so a run's cost scales with the new batch and
     * its collision neighborhood, not with corpus history.
     *
-    * Durability contract: the store is a
-    * directory of immutable `batch-*` subdirectories. Writers serialize
-    * through the [[withStoreLock]] `_lock` lease (concurrent ingest fails
-    * loudly, never silently drops cross-batch pairs). Each run writes its
-    * signatures to a hidden `.staging-*` directory first — invisible to
-    * every reader — then publishes it with ONE filesystem rename. A run
-    * killed mid-write leaves only an orphaned staging directory: the next
-    * run neither loses previously published documents nor double-counts
-    * (spec-asserted). Store-read failures PROPAGATE — only genuine
-    * path-absence means "empty store"; treating an IO error as absence
-    * would silently drop every new↔old pair while still appending, and
-    * later runs could never repair that. Re-ingesting an already-stored
-    * doc_id is a no-op (anti-join before pairing and appending), so
-    * re-running a partially observed batch is idempotent. */
+    * The store is a [[graft.etl.BatchStore]] (writer lease, staged
+    * publish, crash recovery, format marker [[StoreFormatMarker]]). Re-
+    * ingesting an already-stored doc_id is a no-op (anti-join before
+    * pairing and appending), so re-running a partially observed batch is
+    * idempotent. */
   def incrementalMinhashPairs(
       newDocs: DataFrame,
       storePath: String,
@@ -556,33 +469,13 @@ object Dedup {
       replayDeterministic: Boolean = false): DataFrame = {
     import graft.functions.GraftColumns
     val spark = newDocs.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // The writer lease brackets snapshot → pair computation → publish, so
-    // concurrent writers serialize (or fail loudly) instead of silently
-    // losing cross-batch pairs; everything that reads the store below is
-    // materialized (eager checkpoints/caches) before the lease releases.
-    withStoreLock(fs, dir) {
-    // Path-absence is the ONLY condition read as "no store yet"; listing or
-    // read errors (permissions, transient IO) throw instead of silently
-    // pretending the corpus history is empty.
-    val hasStore = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-      val nm = s.getPath.getName
-      !nm.startsWith(".") && !nm.startsWith("_")
-    }
-    // Tokenizer-version guard: stored shingle sets are only comparable to
-    // newly computed ones if both used the same tokenization. A store
-    // written before the space-only-trim change (or by any future tokenizer
-    // revision) holds signatures this code can no longer reproduce — exact
-    // duplicates of control-whitespace docs would silently score below
-    // threshold. Marker files start with '_' so both the hasStore listing
-    // and Spark's parquet file index ignore them.
-    val marker = new org.apache.hadoop.fs.Path(dir, StoreFormatMarker)
-    if (hasStore && !fs.exists(marker))
-      throw new IllegalStateException(
-        s"signature store at $storePath was written by an incompatible " +
-          s"tokenizer version (missing $StoreFormatMarker); rebuild the " +
-          "store from source text before ingesting new batches")
+    // The writer lease brackets snapshot → pair computation → publish;
+    // everything that reads the store below is materialized (eager
+    // checkpoints/caches) before the lease releases.
+    graft.etl.BatchStore.open(spark, storePath, "signature store",
+      StoreFormatMarker, "shingle sets from another tokenizer version are " +
+        "not comparable to new ones") { store =>
+    val hasStore = store.hasBatches
     val rawNewArr0 = newDocs
       .withColumn("__hs", GraftColumns.shingleHashes(col("text"), n))
       .filter(size(col("__hs")) > 0)
@@ -596,18 +489,11 @@ object Dedup {
     // computation once.
     val rawNewArr =
       if (replayDeterministic) rawNewArr0.localCheckpoint(true) else rawNewArr0
-    val oldArr =
-      if (hasStore)
-        // recursiveFileLookup reads both batch-* subdirectories and any
-        // flat files from a pre-staging store layout; hidden .staging-*
-        // directories are filtered by the file index.
-        spark.read.option("recursiveFileLookup", "true").parquet(storePath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawNewArr.schema)
+    val oldArr = store.snapshot(rawNewArr.schema)
     // Idempotent re-ingest: drop documents the store already holds, then
     // sever the lineage from the store path (eager localCheckpoint) so the
     // append below cannot invalidate/recompute this frame mid-run.
-    val (newArr, nNewArr) = checkpointCounted(
+    val (newArr, nNewArr) = graft.etl.BatchStore.checkpointCounted(
       if (hasStore) rawNewArr.join(oldArr.select("doc_id"), Seq("doc_id"), "left_anti")
       else rawNewArr)
     val sideNew = if (replayDeterministic) rawNewArr else newArr
@@ -668,9 +554,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
       .localCheckpoint(true)
-    // Staged publish via the shared helper: staging-sweep, empty-skip,
-    // marker-before-rename, ONE atomic rename.
-    publishStoreBatch(fs, dir, newArr, marker, "signature", precount = nNewArr)
+    store.publish(newArr, nNewArr)
     org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(newArr)
     if (replayDeterministic)
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(rawNewArr)
@@ -901,9 +785,8 @@ object Dedup {
     * (groupBy + anti-join, the skew-safe r7 form); the store itself is
     * always uncapped so a later run with a different cap stays exact.
     *
-    * Durability contract: identical to [[incrementalMinhashPairs]] (lease,
-    * staged atomic publish, propagating reads, anti-joined idempotent
-    * re-ingest). The format marker additionally pins the ANCHOR WIDTH —
+    * The store is a [[graft.etl.BatchStore]]; re-ingest is anti-joined
+    * (idempotent). The format marker additionally pins the ANCHOR WIDTH —
     * `_format-spans-k<k>-v2` — because stored k-gram anchors are only
     * comparable to new ones at the same k and tokenizer revision.
     *
@@ -981,27 +864,14 @@ object Dedup {
     // once.
     val rawNew =
       if (replayDeterministic) rawNew0.localCheckpoint(true) else rawNew0
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withStoreLock(fs, dir) {
-      val hasStore = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-        val nm = s.getPath.getName
-        !nm.startsWith(".") && !nm.startsWith("_")
-      }
-      val marker = new org.apache.hadoop.fs.Path(dir, s"_format-$formatTag")
-      if (hasStore && !fs.exists(marker))
-        throw new IllegalStateException(
-          s"anchor store at $storePath was not written under scheme " +
-            s"'$formatTag' (missing _format-$formatTag); stored anchors " +
-            "are not comparable — rebuild the store")
-      val oldAnchors =
-        if (hasStore)
-          spark.read.option("recursiveFileLookup", "true").parquet(storePath)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawNew.schema)
+    graft.etl.BatchStore.open(spark, storePath, "anchor store",
+      s"_format-$formatTag", "anchors of another width or signature scheme " +
+        "are not comparable") { store =>
+      val hasStore = store.hasBatches
+      val oldAnchors = store.snapshot(rawNew.schema)
       // Idempotent re-ingest + lineage severed from the store path before
       // the append (the incrementalMinhashPairs rationale).
-      val (newAnchors, nNewAnchors) = checkpointCounted(
+      val (newAnchors, nNewAnchors) = graft.etl.BatchStore.checkpointCounted(
         if (hasStore) rawNew.join(oldAnchors.select("doc_id").distinct(),
           Seq("doc_id"), "left_anti")
         else rawNew)
@@ -1049,8 +919,7 @@ object Dedup {
       val spans = islandRuns(matches, minLen, k)
         // Eager checkpoint BEFORE the append (see incrementalMinhashPairs).
         .localCheckpoint(true)
-      publishStoreBatch(fs, dir, newAnchors, marker, "anchor",
-        precount = nNewAnchors)
+      store.publish(newAnchors, nNewAnchors)
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(newAnchors)
       if (replayDeterministic)
         org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(rawNew)
@@ -1413,13 +1282,8 @@ object Dedup {
     * the image/audio bytes never enter the store; a run's cost is the new
     * batch's banding neighborhood, not corpus history.
     *
-    * Durability contract — identical to [[incrementalMinhashPairs]] and
-    * kept in lockstep (same lease file, staging layout, and invariants):
-    * immutable `batch-*` subdirectories; writers serialize through the
-    * `_lock` lease (concurrent ingest fails loudly); staged write to a
-    * hidden `.staging-*` dir published by ONE atomic rename; store-read
-    * errors PROPAGATE (only path-absence means empty); re-ingest of stored
-    * doc_ids is anti-joined out (idempotent replay). The format marker is
+    * The store is a [[graft.etl.BatchStore]]; re-ingest of stored doc_ids
+    * is anti-joined out (idempotent replay). The format marker is
     * `_format-<formatTag>`: callers name the signature scheme (e.g.
     * "dhash-8x8-v1", "audiofp-win31-v1") and a store written under any
     * other scheme fails loudly instead of silently scoring garbage —
@@ -1453,32 +1317,19 @@ object Dedup {
       s"formatTag must be a plain file-name token, got '$formatTag'")
     val (widths, offsets) = chunkLayout(bits, maxHamming)
     val spark = newSigs.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withStoreLock(fs, dir) {
-      val hasStore = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-        val nm = s.getPath.getName
-        !nm.startsWith(".") && !nm.startsWith("_")
-      }
-      val marker = new org.apache.hadoop.fs.Path(dir, s"_format-$formatTag")
-      if (hasStore && !fs.exists(marker))
-        throw new IllegalStateException(
-          s"signature store at $storePath was not written under scheme " +
-            s"'$formatTag' (missing _format-$formatTag); signatures from a " +
-            "different extractor are not comparable — rebuild the store")
+    graft.etl.BatchStore.open(spark, storePath, "signature store",
+      s"_format-$formatTag", "signatures from a different extractor are " +
+        "not comparable") { store =>
+      val hasStore = store.hasBatches
       val rawNew0 = newSigs.select(col("doc_id"), col("sig"))
       // Under replayDeterministic the raw batch is consumed twice (pair
       // side + history anti-join) — materialize it once.
       val rawNew =
         if (replayDeterministic) rawNew0.localCheckpoint(true) else rawNew0
-      val oldSigs =
-        if (hasStore)
-          spark.read.option("recursiveFileLookup", "true").parquet(storePath)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawNew.schema)
+      val oldSigs = store.snapshot(rawNew.schema)
       // Idempotent re-ingest + lineage severed from the store path (eager
       // localCheckpoint) so the append below can't recompute this frame.
-      val (newArr, nNewArr) = checkpointCounted(
+      val (newArr, nNewArr) = graft.etl.BatchStore.checkpointCounted(
         if (hasStore) rawNew.join(oldSigs.select("doc_id"), Seq("doc_id"), "left_anti")
         else rawNew)
       // Pair sides (see the scaladoc): default = new-only vs full store;
@@ -1512,8 +1363,7 @@ object Dedup {
         // Eager checkpoint BEFORE the append: a merely-cached result would
         // recompute against the just-appended store and double-count.
         .localCheckpoint(true)
-      publishStoreBatch(fs, dir, newArr, marker, "signature",
-        precount = nNewArr)
+      store.publish(newArr, nNewArr)
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(newArr)
       if (replayDeterministic)
         org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(rawNew)
@@ -1541,9 +1391,9 @@ object Dedup {
     * center, bucket balance degrades gracefully — recall within a bucket
     * is unaffected; rebuild when drift is material.
     *
-    * Durability contract: identical to [[incrementalMinhashPairs]] (lease,
-    * staged atomic publish, propagating reads, anti-joined idempotent
-    * re-ingest); marker `_format-semlsh-b<nBits>-v1` pins the bucket
+    * The store is a [[graft.etl.BatchStore]] (the center is a sidecar
+    * written before the first batch's rename; re-ingest is anti-joined);
+    * marker `_format-semlsh-b<nBits>-v1` pins the bucket
     * width. Store rows are (vec_id, embedding) — raw vectors, needed for
     * exact cosine verification (dim·4 bytes/vec).
     *
@@ -1557,32 +1407,18 @@ object Dedup {
       nBits: Int = 8,
       replayDeterministic: Boolean = false): DataFrame = {
     val spark = newEmb.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withStoreLock(fs, dir) {
-      val hasStore = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-        val nm = s.getPath.getName
-        !nm.startsWith(".") && !nm.startsWith("_")
-      }
-      val marker = new org.apache.hadoop.fs.Path(dir, s"_format-semlsh-b$nBits-v1")
-      if (hasStore && !fs.exists(marker))
-        throw new IllegalStateException(
-          s"vector store at $storePath was not written at nBits=$nBits " +
-            s"(missing _format-semlsh-b$nBits-v1); bucket assignments are " +
-            "not comparable — rebuild the store")
-      val centerFile = new org.apache.hadoop.fs.Path(dir, "_center")
+    graft.etl.BatchStore.open(spark, storePath, "vector store",
+      s"_format-semlsh-b$nBits-v1", "bucket assignments at another width " +
+        "are not comparable") { store =>
+      val hasStore = store.hasBatches
       val rawNew0 = newEmb.select(col("vec_id"), col("embedding"))
       // replayDeterministic: shared contract with incrementalHammingPairs
       // (full batch vs store-minus-batch → a crash-replayed micro-batch
       // recomputes the SAME pairs under the already-pinned center).
       val rawNew =
         if (replayDeterministic) rawNew0.localCheckpoint(true) else rawNew0
-      val oldVecs =
-        if (hasStore)
-          spark.read.option("recursiveFileLookup", "true").parquet(storePath)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawNew.schema)
-      val (newVecs, nNewVecs) = checkpointCounted(
+      val oldVecs = store.snapshot(rawNew.schema)
+      val (newVecs, nNewVecs) = graft.etl.BatchStore.checkpointCounted(
         if (hasStore) rawNew.join(oldVecs.select("vec_id").distinct(),
           Seq("vec_id"), "left_anti")
         else rawNew)
@@ -1596,13 +1432,10 @@ object Dedup {
             "cannot pin a centering basis")
           s
         } else {
-          if (!fs.exists(centerFile))
+          val txt = new String(store.readSidecar(CenterFile).getOrElse(
             throw new IllegalStateException(
-              s"vector store at $storePath has batches but no _center — " +
-                "the pinned basis is lost; rebuild the store")
-          val in = fs.open(centerFile)
-          val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
+              s"vector store at $storePath has batches but no $CenterFile — " +
+                "the pinned basis is lost; rebuild the store")), "UTF-8")
           val lines = txt.trim.split('\n')
           (lines(1).split(',').map(_.trim.toLong).toSeq, lines(0).trim.toLong)
         }
@@ -1622,13 +1455,9 @@ object Dedup {
       // Center rides beforeRename (the marker-ordering rationale: a crash
       // in between leaves metadata with no visible batches — harmless;
       // the reverse strands a valid store unreadable).
-      publishStoreBatch(fs, dir, newVecs, marker, "vector", () => {
-        if (!hasStore) {
-          val out = fs.create(centerFile, true)
-          try out.write(s"$n\n${qsum.mkString(",")}\n".getBytes("UTF-8"))
-          finally out.close()
-        }
-      }, precount = nNewVecs)
+      store.publish(newVecs, nNewVecs, () =>
+        if (!hasStore)
+          store.writeSidecar(CenterFile, s"$n\n${qsum.mkString(",")}\n".getBytes("UTF-8")))
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(newVecs)
       if (replayDeterministic)
         org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(rawNew)
@@ -1641,164 +1470,38 @@ object Dedup {
     * store listing (one parquet footer + file-index entry per batch dir),
     * so a store built from thousands of small ingests (streaming
     * micro-batches especially) pays a per-run fixed cost linear in batch
-    * COUNT even when row count is modest. Compaction merges every
-    * published `batch-*` directory into one, under the same writer lease
-    * as ingest (compacting against a concurrent writer's half-published
-    * batch would silently drop it).
-    *
-    * Publish order is MERGE-FIRST: write the union (`.distinct()` — store
-    * rows are exact duplicates across batches only if a crash left an
-    * earlier compaction half-finished, see below) to a hidden staging
-    * dir, atomically publish it as a fresh batch, THEN delete the old
-    * batch dirs. A crash between publish and the deletes leaves rows
-    * visible TWICE — never lost (the erase-side trade is inverted here:
-    * compaction must never lose corpus history, while transient
-    * duplicates are healed by re-running compaction, whose distinct()
-    * collapses them). The format marker is untouched — compaction is
-    * scheme-agnostic. Returns (batches merged, rows in the compacted
-    * batch); a store with ≤ 1 batch is a no-op. */
+    * COUNT even when row count is modest. Merges every batch into one
+    * through [[graft.etl.BatchStore.compact]] (merge first, under the
+    * same writer lease as ingest; scheme-agnostic, the format marker is
+    * untouched). Returns (batches merged, rows in the compacted batch); a
+    * store with ≤ 1 batch is a no-op. */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String): (Long, Long) = {
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return (0L, 0L)
-    withStoreLock(fs, dir) {
-      val batches = fs.listStatus(dir)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
-      if (batches.length <= 1) (0L, 0L)
-      else {
-        val merged = spark.read
-          .parquet(batches.map(_.getPath.toString).toIndexedSeq: _*)
-          .distinct()
-        val id = java.util.UUID.randomUUID().toString
-        val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$id")
-        merged.write.parquet(staging.toString)
-        val rows = spark.read.parquet(staging.toString).count()
-        if (!fs.rename(staging, new org.apache.hadoop.fs.Path(dir, s"batch-$id")))
-          throw new IllegalStateException(
-            s"compactStore: failed to publish merged batch $staging")
-        batches.foreach { b =>
-          fs.delete(b.getPath, true)
-          if (fs.exists(b.getPath))
-            throw new IllegalStateException(
-              s"compactStore: failed to delete ${b.getPath} — rows are " +
-                "duplicated until a re-run succeeds")
-        }
-        (batches.length.toLong, rows)
-      }
-    }
-  }
+      storePath: String): (Long, Long) =
+    graft.etl.BatchStore.existing(spark, storePath, "signature store")(_.compact())
+      .getOrElse((0L, 0L))
 
   /** Key erasure over a persisted signature store — the right-to-be-
     * forgotten obligation EXTENDS to derived signatures: deleting a
     * document's rows from the data lake ([[graft.etl.Erasure.eraseKeys]])
     * while its shingle sets / dHashes stay in a store means future ingests
     * still pair against the erased content. Works on any store layout this
-    * file writes (minhash or Hamming batches) — only `doc_id` is touched,
+    * file writes (minhash or Hamming batches) — only `keyCol` is touched,
     * the signature payload schema is opaque to the rewrite.
     *
-    * Mechanics, under the same writer lease as ingest (an erase racing an
-    * ingest would otherwise resurrect keys from the ingest's pre-erase
-    * snapshot): each `batch-*` directory is probed for hits; clean batches
-    * are NOT touched (byte-identical files — erasure cost scales with the
-    * keys' batch locality, not store size). A hit batch is rewritten in
-    * three renames biased ERASE-FIRST: stage the surviving rows to a
-    * hidden `.staging-*` dir, atomically retire the old batch to a hidden
-    * `.retired-*` name (the erased keys vanish from every reader HERE),
-    * atomically publish the staging as a fresh `batch-*`, then delete the
-    * retired dir. A crash between retire and publish can therefore HIDE a
-    * batch's surviving signatures (recoverable from the `.retired-*` dir;
-    * re-ingest of the affected doc_ids is also safe — they re-pair and
-    * re-append) but can never leave an erased key visible after the
-    * operation reported that batch processed. A batch whose every row is
-    * erased is retired without a replacement. Re-ingesting an erased
-    * doc_id later is deliberately possible (the anti-join no longer sees
-    * it): erasure forgets; it does not blocklist.
-    *
-    * Key-set plumbing is SIZE-ADAPTIVE (r11 verdict #5): up to
-    * [[graft.etl.Erasure.LiteralKeyMax]] keys are collected into an
-    * `isin` literal that pushes into every batch probe scan (the
-    * request-sized fast path); a larger GDPR-batch stays a DataFrame and
-    * each batch probe becomes a semi-/anti-join — a 10⁶-key request must
-    * never become a 10⁶-literal expression tree (analyzer cost, plan-size
-    * hazards). The probe is a bounded `limit(max+1).collect()`, never a
-    * full collect. `keyCol` names the store's id column — `doc_id` for
-    * the minhash/Hamming/anchor/frame stores, `vec_id` for the
-    * [[incrementalSemanticPairs]] vector store. Returns the number of
-    * signature rows erased. */
+    * Mechanics: [[graft.etl.BatchStore.erase]] under the same writer lease
+    * as ingest (an erase racing an ingest would otherwise resurrect keys
+    * from the ingest's pre-erase snapshot) — clean batches stay byte-
+    * identical, hit batches are rewritten erase-first, and the key set is
+    * size-adaptive ([[graft.etl.Erasure.LiteralKeyMax]]). Re-ingesting an
+    * erased doc_id later is deliberately possible (the anti-join no longer
+    * sees it): erasure forgets; it does not blocklist. `keyCol` names the
+    * store's id column — `doc_id` for the minhash/Hamming/anchor/frame
+    * stores, `vec_id` for the [[incrementalSemanticPairs]] vector store.
+    * Returns the number of signature rows erased. */
   def eraseFromStore(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, keys: DataFrame, keyCol: String = "doc_id"): Long = {
-    // drop nulls before collecting: getLong on a null row reads 0 and a
-    // null key would silently erase doc 0 (review finding, shared with
-    // the gram-store erasure where the hazard was a whole-batch wipe)
-    val keysNorm = keys.select(col(keys.columns.head).cast("long").as("__erase_key"))
-      .filter(col("__erase_key").isNotNull).distinct()
-    val max = graft.etl.Erasure.LiteralKeyMax
-    val probe = keysNorm.limit(max + 1).collect().map(_.getLong(0))
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir) || probe.isEmpty) return 0L
-    // (hit slice, keep slice) of a batch under either representation;
-    // the frame path pins ONE materialization of the key set so the
-    // per-batch joins never recompute the request's lineage. The keep
-    // filter coalesces its NULL (a null-keyed store row makes `NOT isin`
-    // null → silently dropped) to true — null-keyed rows are never named
-    // by a takedown, and the frame path's left_anti keeps them, so the
-    // two representations must agree (review finding r12).
-    val kfOpt =
-      if (probe.length <= max) None else Some(keysNorm.localCheckpoint(true))
-    val (hitOf, keepOf): (DataFrame => DataFrame, DataFrame => DataFrame) =
-      kfOpt match {
-        case None =>
-          (b => b.filter(col(keyCol).isin(probe: _*)),
-            b => b.filter(coalesce(!col(keyCol).isin(probe: _*), lit(true))))
-        case Some(kf) =>
-          (b => b.join(kf, b(keyCol) === kf("__erase_key"), "left_semi"),
-            b => b.join(kf, b(keyCol) === kf("__erase_key"), "left_anti"))
-      }
-    try withStoreLock(fs, dir) {
-      val batches = fs.listStatus(dir)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch-"))
-      var erased = 0L
-      batches.foreach { b =>
-        val batch = spark.read.parquet(b.getPath.toString)
-        val hits = hitOf(batch).count()
-        if (hits > 0L) {
-          erased += hits
-          val keep = keepOf(batch)
-          val keepCount = keep.count()
-          val id = java.util.UUID.randomUUID().toString
-          val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$id")
-          val retired = new org.apache.hadoop.fs.Path(dir, s".retired-$id")
-          // Stage FIRST (reads the old dir, writes elsewhere — no window),
-          // skip the replacement entirely when nothing survives (an empty
-          // parquet dir would poison the store's recursive read).
-          if (keepCount > 0L)
-            graft.etl.BatchFiles.sizedByCount(keep, keepCount)
-              .write.parquet(staging.toString)
-          if (!fs.rename(b.getPath, retired))
-            throw new IllegalStateException(
-              s"eraseFromStore: failed to retire ${b.getPath}")
-          if (keepCount > 0L && !fs.rename(staging, new org.apache.hadoop.fs.Path(
-              dir, s"batch-$id")))
-            throw new IllegalStateException(
-              s"eraseFromStore: retired ${b.getPath} but failed to publish " +
-                s"$staging — surviving signatures are in $retired; re-publish " +
-                "manually or re-ingest the affected documents")
-          // fail LOUDLY if the retired payload survives (the erased keys
-          // would still be on disk — same stance as Erasure.eraseKeys)
-          fs.delete(retired, true)
-          if (fs.exists(retired))
-            throw new IllegalStateException(
-              s"eraseFromStore: failed to delete $retired — erased keys " +
-                "would survive on disk")
-        }
-      }
-      erased
-    } finally kfOpt.foreach( // release the pinned key frame (SCALING #38's
-      // cache-leak class: one orphaned checkpoint RDD per drained batch)
-      org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint)
-  }
+      storePath: String, keys: DataFrame, keyCol: String = "doc_id"): Long =
+    graft.etl.BatchStore.existing(spark, storePath, "signature store")(
+      _.erase(keys, keyCol)).getOrElse(0L)
 
   /** Connected components over a near-dup pair list → the dedup decision a
     * training pipeline actually needs: every document labeled with its
@@ -2047,7 +1750,7 @@ object Dedup {
     val spark = newDocs.sparkSession
     val dir = new org.apache.hadoop.fs.Path(storePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    withStoreLock(fs, dir) {
+    graft.etl.WriterLease.withLock(fs, dir, "label store") {
       val snapshots =
         if (fs.exists(dir))
           fs.listStatus(dir).map(_.getPath.getName)
@@ -2108,8 +1811,8 @@ object Dedup {
       .map(_.stripPrefix("labels-").toLong + 1).getOrElse(0L)
     val next = f"labels-$seq%06d"
     val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$next")
-    graft.etl.BatchFiles.sized(labels.select(col("doc_id"), col("cluster_id")))
-      .write.mode("overwrite").parquet(staging.toString)
+    graft.etl.BatchStore.sized(labels.select(col("doc_id"), col("cluster_id")),
+      labels.count()).write.mode("overwrite").parquet(staging.toString)
     if (!fs.exists(marker)) {
       val out = fs.create(marker, true)
       out.close()
@@ -2140,50 +1843,35 @@ object Dedup {
     * the same lease. Returns the number of member rows erased. */
   def eraseFromLabelStore(spark: org.apache.spark.sql.SparkSession,
       storePath: String, keys: DataFrame): Long = {
-    // null keys dropped before collect (see eraseFromStore); same
-    // size-adaptive representation — literals up to LiteralKeyMax, an
-    // anti-join above it (a 10⁵-key takedown must not become a 10⁵-term
-    // isin tree)
-    val keysNorm = keys.select(col(keys.columns.head).cast("long").as("__erase_key"))
-      .filter(col("__erase_key").isNotNull).distinct()
-    val max = graft.etl.Erasure.LiteralKeyMax
-    val probe = keysNorm.limit(max + 1).collect().map(_.getLong(0))
     val dir = new org.apache.hadoop.fs.Path(storePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir) || probe.isEmpty) return 0L
-    withStoreLock(fs, dir) {
-      val snapshots = fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith("labels-"))
-        .sortBy(_.stripPrefix("labels-").toLong)
-      if (snapshots.isEmpty) return 0L
-      val labels = spark.read.parquet(s"$storePath/${snapshots.last}")
-        .select(col("doc_id"), col("cluster_id"))
-      // keep-filter null posture matches the frame path's left_anti: a
-      // null-keyed snapshot row survives either representation (coalesce —
-      // `NOT isin` is null on a null key and would silently drop the row)
-      val kfOpt =
-        if (probe.length <= max) None else Some(keysNorm.localCheckpoint(true))
-      val survivors = kfOpt match {
-        case None =>
-          labels.filter(coalesce(!col("doc_id").isin(probe: _*), lit(true)))
-        case Some(kf) =>
-          labels.join(kf, labels("doc_id") === kf("__erase_key"), "left_anti")
-      }
-      val relabeled = survivors
-        .join(
-          survivors.groupBy(col("cluster_id"))
-            .agg(min(col("doc_id")).as("__new_label")),
-          Seq("cluster_id"))
-        .select(col("doc_id"), col("__new_label").as("cluster_id"))
-        .localCheckpoint(true)
-      try {
-        val erased = labels.count() - relabeled.count()
-        if (erased > 0L) publishLabelSnapshot(fs, dir, relabeled, snapshots)
-        erased
-      } finally {
-        // both pins die with the call (SCALING #38's cache-leak class)
-        (kfOpt.toSeq :+ relabeled).foreach(
-          org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint)
+    if (!fs.exists(dir)) return 0L
+    // the size-adaptive key set every erase shares (Erasure.withKeySet)
+    graft.etl.Erasure.withKeySet(keys, org.apache.spark.sql.types.LongType) { ks =>
+      if (ks.isEmpty) 0L
+      else graft.etl.WriterLease.withLock(fs, dir, "label store") {
+        val snapshots = fs.listStatus(dir).map(_.getPath.getName)
+          .filter(_.startsWith("labels-"))
+          .sortBy(_.stripPrefix("labels-").toLong)
+        if (snapshots.isEmpty) 0L
+        else {
+          val labels = spark.read.parquet(s"$storePath/${snapshots.last}")
+            .select(col("doc_id"), col("cluster_id"))
+          val survivors = ks.surviving(labels, "doc_id")
+          val relabeled = survivors
+            .join(
+              survivors.groupBy(col("cluster_id"))
+                .agg(min(col("doc_id")).as("__new_label")),
+              Seq("cluster_id"))
+            .select(col("doc_id"), col("__new_label").as("cluster_id"))
+            .localCheckpoint(true)
+          try {
+            val erased = labels.count() - relabeled.count()
+            if (erased > 0L) publishLabelSnapshot(fs, dir, relabeled, snapshots)
+            erased
+          } finally org.apache.spark.sql.graftbridge.DatasetBridge
+            .unpersistCheckpoint(relabeled) // SCALING #38's cache-leak class
+        }
       }
     }
   }

@@ -97,13 +97,10 @@ object FuzzyJoin {
     * (the `fuzzy_incr_*` rows of
     * `git show d600ca6:src/main/scala/graft/IncrementalProbe.scala`).
     *
-    * Durability contract shared with the signature stores: writer lease
-    * ([[graft.etl.WriterLease]]), staged `.staging-*` → atomic rename
-    * publish, format marker written before the publishing rename,
-    * store-read errors propagate (only true path absence means "empty
-    * store"), re-ingest anti-joined to stay idempotent. Store rows are
-    * (doc_id, s, vs) — the string is kept for the exact recheck of
-    * later batches' candidates; ~(len+1)·len bytes per record.
+    * The store is a [[graft.etl.BatchStore]]; re-ingest is anti-joined
+    * to stay idempotent. Store rows are (doc_id, s, vs) — the string is
+    * kept for the exact recheck of later batches' candidates;
+    * ~(len+1)·len bytes per record.
     *
     * `replayDeterministic` follows [[Dedup.incrementalHammingPairs]]'s
     * contract: pair the FULL batch against store-minus-batch, so a
@@ -120,50 +117,22 @@ object FuzzyJoin {
       strCol: String = "s",
       replayDeterministic: Boolean = false): DataFrame = {
     val spark = newRecs.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(storePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.etl.WriterLease.withLock(fs, dir, "fuzzy neighborhood store") {
-      // Crash hygiene (safe here: the lease guarantees no live writer is
-      // mid-stage): a crash between the staging write and the publishing
-      // rename leaks one hidden `.staging-*` dir per failure — sweep any
-      // leftovers on ingest start so a long-lived store can't accrete
-      // debris. Published `batch-*` dirs are never touched.
-      if (fs.exists(dir))
-        fs.listStatus(dir).iterator
-          .filter(_.getPath.getName.startsWith(".staging-"))
-          .foreach(s => fs.delete(s.getPath, true))
-      // Path-absence is the ONLY condition read as "no store yet"; listing
-      // or read errors propagate (the signature-store policy).
-      val hasStore = fs.exists(dir) && fs.listStatus(dir).exists { s =>
-        val nm = s.getPath.getName
-        !nm.startsWith(".") && !nm.startsWith("_")
-      }
-      val marker = new org.apache.hadoop.fs.Path(dir, FuzzyStoreFormat)
-      if (hasStore && !fs.exists(marker))
-        throw new IllegalStateException(
-          s"fuzzy neighborhood store at $storePath was written by an " +
-            s"incompatible scheme (missing $FuzzyStoreFormat); rebuild the " +
-            "store from source records before ingesting new batches")
+    graft.etl.BatchStore.open(spark, storePath, "fuzzy neighborhood store",
+      FuzzyStoreFormat, "variant sets from another neighborhood scheme " +
+        "would silently miss cross-batch candidates") { store =>
+      val hasStore = store.hasBatches
       val rawNew0 = newRecs.select(
         col(idCol).as("doc_id"), col(strCol).as("s"), variantArr(col(strCol)).as("vs"))
       // Under replayDeterministic the raw batch feeds the pair side AND two
       // anti-joins — materialize the neighborhood computation once.
       val rawNew =
         if (replayDeterministic) rawNew0.localCheckpoint(true) else rawNew0
-      val oldArr =
-        if (hasStore)
-          spark.read.option("recursiveFileLookup", "true").parquet(storePath)
-        else spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawNew.schema)
+      val oldArr = store.snapshot(rawNew.schema)
       // Idempotent re-ingest + lineage severed from the store path (eager
       // localCheckpoint) so the append below can't recompute this frame.
-      // Count rides the checkpoint materialization via observe() — no
-      // separate count job at publish (the Dedup.checkpointCounted pattern).
-      val newObs = org.apache.spark.sql.Observation()
-      val newArr = (
+      val (newArr, newCount) = graft.etl.BatchStore.checkpointCounted(
         if (hasStore) rawNew.join(oldArr.select("doc_id"), Seq("doc_id"), "left_anti")
-        else rawNew
-      ).observe(newObs, count(lit(1)).as("n")).localCheckpoint(true)
+        else rawNew)
       val sideNew = if (replayDeterministic) rawNew else newArr
       val sideOld =
         if (replayDeterministic && hasStore)
@@ -199,26 +168,7 @@ object FuzzyJoin {
         .filter(col("dist") <= 1)
         .select(col("__ida").as("id_a"), col("__idb").as("id_b"), col("dist"))
         .localCheckpoint(true)
-      // Staged publish: hidden staging dir, marker, ONE atomic rename. A
-      // crash before the rename leaves readers' view unchanged. An
-      // all-duplicate re-ingest (newArr empty after the anti-join) skips
-      // the publish entirely — an idempotent no-op must not grow the
-      // store's batch-dir count with replays.
-      val newCount = newObs.get.get("n") match {
-        case Some(v: Long) => v
-        case _ => 0L
-      }
-      if (newCount > 0L) {
-        val batchId = java.util.UUID.randomUUID().toString
-        val staging = new org.apache.hadoop.fs.Path(dir, s".staging-$batchId")
-        val published = new org.apache.hadoop.fs.Path(dir, s"batch-$batchId")
-        graft.etl.BatchFiles.sizedByCount(newArr, newCount)
-          .write.parquet(staging.toString)
-        if (!fs.exists(marker)) fs.create(marker, true).close()
-        if (!fs.rename(staging, published))
-          throw new IllegalStateException(
-            s"failed to publish neighborhood batch $staging -> $published")
-      }
+      store.publish(newArr, newCount)
       org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(newArr)
       if (replayDeterministic)
         org.apache.spark.sql.graftbridge.DatasetBridge.unpersistCheckpoint(rawNew)

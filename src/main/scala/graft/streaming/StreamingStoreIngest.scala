@@ -12,9 +12,9 @@ import graft.operators.Dedup
   * the durable batch store with the writer lease. A production pipeline
   * runs ONE corpus history: each micro-batch of documents is ingested into
   * the SAME durable store batch jobs use, through the same
-  * `withStoreLock` lease — so stream-vs-batch, whoever arrives first, the
-  * cross pairs are emitted exactly once and a concurrent batch writer
-  * fails loudly instead of silently losing pairs.
+  * [[graft.etl.BatchStore]] writer lease — so stream-vs-batch, whoever
+  * arrives first, the cross pairs are emitted exactly once and a
+  * concurrent batch writer fails loudly instead of silently losing pairs.
   *
   * Semantics inherited from [[Dedup.incrementalMinhashPairs]] (all
   * spec-asserted there): arrival-order runs ≡ one batch run, idempotent

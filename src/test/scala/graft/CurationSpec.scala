@@ -711,6 +711,37 @@ class CurationSpec extends SparkSpec {
       "stale-bloom sweep must not cost the store its known grams")
   }
 
+  test("eraseFromGramStore: an over-LiteralKeyMax request plans no isin wider than LiteralKeyMax") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = java.nio.file.Files.createTempDirectory("graft_nvbig").toString
+    Curation.noveltyIngest(
+      Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"), dir)
+    val max = graft.etl.Erasure.LiteralKeyMax
+    val widest = new java.util.concurrent.atomic.AtomicInteger(0)
+    def seen(n: Int): Unit = { widest.accumulateAndGet(n, math.max); () }
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.optimizedPlan.foreach(_.expressions.foreach(_.foreach {
+          case i: In => seen(i.list.size)
+          case i: InSet => seen(i.hset.size)
+          case _ => ()
+        }))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val erased =
+      try {
+        val n = Curation.eraseFromGramStore(spark, dir,
+          spark.range(0, max + 1L).select(col("id").as("doc_id")))
+        org.apache.spark.sql.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+        n
+      } finally spark.listenerManager.unregister(listener)
+    assert(erased > 0L)
+    assert(widest.get <= max, s"a planned isin carries ${widest.get} literals")
+  }
+
   test("lengthBuckets: exact rank deciles, per-bucket max padding waste") {
     // 20 docs with token lengths 1..20 → 10 buckets of 2 docs; bucket k
     // holds lengths (2k+1, 2k+2), waste = (2·(2k+2) − (4k+3))·10⁴ div

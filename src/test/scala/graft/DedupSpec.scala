@@ -383,9 +383,9 @@ class DedupSpec extends SparkSpec {
     // Writer A publishes batch1 (docs 0-2, containing near-dup pair 0-1).
     pairsOf(Dedup.incrementalMinhashPairs(docs.filter($"doc_id" <= 2L), dir))
     // Lease released after a successful run.
-    assert(!new java.io.File(dir, Dedup.StoreLockFile).exists())
+    assert(!new java.io.File(dir, graft.etl.WriterLease.LockFile).exists())
     // Writer A (simulated) holds the lock mid-ingest when writer B arrives.
-    val lock = new java.io.File(dir, Dedup.StoreLockFile)
+    val lock = new java.io.File(dir, graft.etl.WriterLease.LockFile)
     java.nio.file.Files.write(lock.toPath,
       "writerA@12345".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val ex = intercept[IllegalStateException] {
@@ -511,7 +511,7 @@ class DedupSpec extends SparkSpec {
       Seq((10L, 0L)).toDF("doc_id", "sig"), dir, 64, 2, "test-v1"))
     assert(run4.isEmpty)
     // the lease guards erase like ingest: a held lock fails loudly
-    java.nio.file.Files.write(new java.io.File(dir, Dedup.StoreLockFile).toPath,
+    java.nio.file.Files.write(new java.io.File(dir, graft.etl.WriterLease.LockFile).toPath,
       "writerZ@1".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val ex = intercept[IllegalStateException] {
       Dedup.eraseFromStore(spark, dir, Seq(10L).toDF("doc_id"))

@@ -236,4 +236,19 @@ class DeletionVectorSpec extends SparkSpec {
     assert(graft.etl.TimeTravel.readLatest(spark, tableRoot, "t")
       .select("id").as[Long].collect().sorted.toSeq === (20L until 100L))
   }
+
+  test("applyDeletesAsRun on file: URIs publishes under the table root, not the working directory") {
+    val root = java.nio.file.Files.createTempDirectory("graft_dv_uri").toString
+    val dataDir = s"$root/data"
+    (0L until 20L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(dataDir)
+    DeletionVectors.addDeletes(spark, dataDir, s"$root/dv", col("id") < 5)
+    val run = DeletionVectors.applyDeletesAsRun(spark, s"file:$dataDir", s"file:$root/dv",
+      s"file:$root/table", jobName = "t",
+      at = java.time.Instant.parse("2026-01-01T00:00:00Z"))
+    assert(run === s"file:$root/table/2026-01-01-00-00-00/t/data")
+    assert(new java.io.File(root, "table").list().toSeq === Seq("2026-01-01-00-00-00"))
+    assert(spark.read.parquet(run).select("id").as[Long].collect().sorted.toSeq ===
+      (5L until 20L))
+    assert(!new java.io.File(root, "dv").exists(), "store resets after publish")
+  }
 }

@@ -113,6 +113,24 @@ class LayoutSpec extends SparkSpec {
     assert(e.getMessage.contains("immutable"))
   }
 
+  test("optimize on a file: URI output dir publishes at that path, staging included") {
+    val dir = Files.createTempDirectory("graft_optimize_uri").toString
+    val df = spark.range(2000).select((col("id") % 50L).as("a"),
+      (col("id") % 37L).as("b"), col("id").as("payload"))
+    df.repartition(4).write.parquet(
+      s"${Sink.runRoot(dir, java.time.Instant.ofEpochSecond(1000000000L))}/job/data")
+    val stamp = Layout.optimize(spark, s"file:$dir", "job", "a", "b",
+      targetBytes = 4L * 1024, at = java.time.Instant.ofEpochSecond(1000000100L))
+    assert(TimeTravel.listRuns(s"file:$dir", hadoopConf).last === stamp)
+    assert(!new java.io.File(dir).list().exists(_.startsWith(".staging")))
+    assert(!new java.io.File(s"$dir/$stamp/job/zonemap_build").exists())
+    val optimized = TimeTravel.readLatest(spark, s"file:$dir", "job")
+    assert(optimized.count() === 2000L)
+    // sized from the source's parquet bytes: several files, not one
+    assert(new java.io.File(s"$dir/$stamp/job/data").list()
+      .count(_.endsWith(".parquet")) > 1)
+  }
+
   test("write-audit-publish: bad batch quarantined and invisible, good batch published") {
     import graft.operators.Validation
     val outputDir = Files.createTempDirectory("graft_wap").toString

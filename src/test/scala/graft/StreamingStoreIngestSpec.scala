@@ -230,7 +230,7 @@ class StreamingStoreIngestSpec extends SparkSpec {
     writeBatches(srcDir)
     // A concurrent batch writer holds the lease.
     Files.createDirectories(java.nio.file.Paths.get(store))
-    Files.writeString(java.nio.file.Paths.get(store, Dedup.StoreLockFile),
+    Files.writeString(java.nio.file.Paths.get(store, graft.etl.WriterLease.LockFile),
       "batch-writer@test")
 
     def startStream() = StreamingStoreIngest.run(
@@ -249,7 +249,7 @@ class StreamingStoreIngestSpec extends SparkSpec {
     // replays the failed micro-batch from the checkpoint and the rest of
     // the files, converging to the exact batch totals (anti-join makes a
     // half-applied attempt idempotent).
-    Files.delete(java.nio.file.Paths.get(store, Dedup.StoreLockFile))
+    Files.delete(java.nio.file.Paths.get(store, graft.etl.WriterLease.LockFile))
     val q2 = startStream()
     try q2.processAllAvailable() finally q2.stop()
     val streamed = pairSet(spark.read.parquet(pairsOut))
